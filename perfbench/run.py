@@ -62,12 +62,8 @@ def _pss_bytes(pid: int) -> int:
     return 0
 
 
-def _tree_rss_mb(root_pid: int) -> dict[str, float]:
-    """Resident memory of ``root_pid`` and all its descendants, in MB, by
-    command name (the driver interpreter, ``java``, Python workers).
-    Summing PSS counts a page shared by forked processes once: the
-    Python workers share the daemon's pages, and a JVM that forks to
-    start a worker is briefly two processes with one set of pages."""
+def _process_tree(root_pid: int) -> dict[int, str]:
+    """``root_pid`` and all its descendants: pid -> command name."""
     parent: dict[int, int] = {}
     comm: dict[int, str] = {}
     for stat in glob.glob("/proc/[0-9]*/stat"):
@@ -85,8 +81,18 @@ def _tree_rss_mb(root_pid: int) -> dict[str, float]:
         kids = [c for c, pp in parent.items() if pp == p and c not in tree]
         tree.update(kids)
         frontier.extend(kids)
+    return {p: comm[p] for p in tree if p in comm}
+
+
+def _tree_rss_mb(root_pid: int) -> dict[str, float]:
+    """Resident memory of ``root_pid`` and all its descendants, in MB, by
+    command name (the driver interpreter, ``java``, Python workers).
+    Summing PSS counts a page shared by forked processes once: the
+    Python workers share the daemon's pages, and a JVM that forks to
+    start a worker is briefly two processes with one set of pages."""
+    comm = _process_tree(root_pid)
     out: dict[str, float] = {}
-    for p in tree:
+    for p in comm:
         try:
             size = _pss_bytes(p)
         except (OSError, ValueError):
@@ -96,8 +102,10 @@ def _tree_rss_mb(root_pid: int) -> dict[str, float]:
 
 
 class _RssSampler:
-    """Samples the process tree's RSS; keeps the peak total and the
-    breakdown at that peak."""
+    """Samples the process tree's memory; keeps the peak total and the
+    breakdown at that peak. A peak must hold for two samples in a row: a
+    JVM thread that starts a process vforks, and for that instant the
+    child reports the whole JVM address space as its own."""
 
     def __init__(self, period_s: float = 0.25):
         self.peak_mb = 0.0
@@ -107,11 +115,14 @@ class _RssSampler:
         self._thread = threading.Thread(target=self._run, daemon=True)
 
     def _run(self):
+        prev: dict[str, float] = {}
         while not self._stop.is_set():
-            by_command = _tree_rss_mb(os.getpid())
-            if sum(by_command.values()) > self.peak_mb:
-                self.peak_mb = sum(by_command.values())
-                self.peak_by_command = by_command
+            cur = _tree_rss_mb(os.getpid())
+            held = min((prev, cur), key=lambda d: sum(d.values()))
+            if sum(held.values()) > self.peak_mb:
+                self.peak_mb = sum(held.values())
+                self.peak_by_command = held
+            prev = cur
             self._stop.wait(self._period)
 
     def __enter__(self):
@@ -191,6 +202,31 @@ def _stop_jvm() -> None:
             proc.wait()
 
 
+def _end_descendants(grace_s: float = 20.0) -> None:
+    """Terminate every process this run started that is still alive (a
+    run stopped while the JVM was starting has no gateway to shut down)
+    and wait until each has ended."""
+    left = set(_process_tree(os.getpid())) - {os.getpid()}
+    for sig in (signal.SIGTERM, signal.SIGKILL):
+        for p in left:
+            try:
+                os.kill(p, sig)
+            except ProcessLookupError:
+                pass
+        deadline = time.time() + grace_s
+        while left and time.time() < deadline:
+            while True:  # reap our own children so they do not linger
+                try:
+                    if os.waitpid(-1, os.WNOHANG)[0] == 0:
+                        break
+                except ChildProcessError:
+                    break
+            left = {p for p in left if os.path.exists(f"/proc/{p}")}
+            time.sleep(0.1)
+        if not left:
+            return
+
+
 def _environment(work: str, trace: bool) -> None:
     """Size the session to the machine and keep every file inside the
     checkout, from outside the engine (its code reads these)."""
@@ -236,7 +272,7 @@ def _untraced_reference(args, state_dir: str) -> float:
     cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", args.workload,
            "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", "0"]
     proc = subprocess.run(cmd, capture_output=True, text=True,
-                          timeout=DEADLINE_S // 2, cwd=ROOT, check=True)
+                          timeout=100, cwd=ROOT, check=True)
     return json.loads(proc.stdout.strip().splitlines()[-1])["metrics"][
         "throughput_per_s"]["value"]
 
@@ -255,17 +291,17 @@ def _probe(b, out) -> None:
     """Traced runs only: time the topic read, the decode and the
     envelope encrypt each alone, after the measured phase."""
     from dataflow_pubsub_message_encryption_spark.sources import fixtures, wire
+    from workloads import noop
 
     in_dir, mac_mode = out.facts["probe"]
     topic = out.facts["topic_dir"]
 
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
     with b.tracer.span("probe.sources.scan"):
         noop(wire.read_topic_batch(b.spark, topic))
     with b.tracer.span("probe.crypto.decrypt_verify"):
-        noop(wire.decode_wire(wire.read_topic_batch(b.spark, topic), mac_mode=mac_mode))
+        noop(
+            wire.decode_wire(wire.read_topic_batch(b.spark, topic), mac_mode=mac_mode)
+        )
     with b.tracer.span("probe.crypto.encrypt"):
         noop(fixtures.with_envelope(
             fixtures.load_events(b.spark, in_dir), tamper=True, mac_mode=mac_mode))
@@ -370,6 +406,7 @@ def main(argv=None) -> int:
             try:
                 _stop_jvm()
             finally:
+                _end_descendants()
                 shutil.rmtree(work, ignore_errors=True)
 
     print(json.dumps(detail))

@@ -180,7 +180,7 @@ def test_open_loop_releases_in_order_on_schedule(tmp_path):
 
 
 def test_stream_segments_scale_with_seconds():
-    assert workloads.stream_segments(8) == (5, 4)
+    assert workloads.stream_segments(10) == (5, 5)
     assert workloads.stream_segments(1) == (2, 2)
 
 
