@@ -813,7 +813,8 @@ def dedup_simhash(spark, sf_dir):
     # the SWAR lane mapping below reinterprets raw bytes as uint64 words
     # and back; every view uses explicit '<u8', which only matches the
     # in-memory lane layout on a little-endian host.
-    assert sys.byteorder == "little", "simhash SWAR path assumes little-endian"
+    if sys.byteorder != "little":
+        raise RuntimeError("simhash SWAR path assumes little-endian")
 
     @F.pandas_udf("long")
     def simhash64(texts: pd.Series) -> pd.Series:

@@ -2674,12 +2674,14 @@ def _gr_edges_sql(l: int) -> str:
 # family's recall recovery), never from the all-pairs self-join.
 _GRB_TABLES = ((0, 4), (4, 8))
 
-# pair-kernel occupancy cap (VERDICT r15 item 7): 65536² float64 is a
-# 32 GiB distance block — far past any bucket the bits ≈ log2(n/B)
-# sizing rule admits (target mean occupancy B=160); a bucket at the cap
-# indicates a mis-sized table, and the kernel's assert names the knob
-# instead of OOMing the Python worker.
-_GRB_OCC_CAP = 65536
+# pair-kernel occupancy cap (VERDICT r15 item 7): the kernel's n×n
+# distance block D is n²·8 bytes — 2 GiB at n=16384, and the expression
+# that builds D holds a few n² float64 temporaries besides, so the cap
+# bounds one Python worker's memory. It is still far past any bucket the
+# bits ≈ log2(n/B) sizing rule admits (target mean occupancy B=160); a
+# bucket over the cap indicates a mis-sized table, and the kernel's
+# ValueError names the knob instead of OOMing the Python worker.
+_GRB_OCC_CAP = 16384
 
 
 def _lsh_slice_sql(col: str, lo: int, hi: int) -> str:
@@ -2980,18 +2982,19 @@ def _grb_scored_pairs_arrow(nodes):
     occupancy², the same Σ n_c² budget that bounds the join form's
     output — a skewed cell costs both forms alike, and the table-width
     knob (`bits ≈ log2(n/B)`) bounds occupancy in both; the explicit
-    `_GRB_OCC_CAP` assert turns a pathological bucket into a fast,
+    `_GRB_OCC_CAP` check turns a pathological bucket into a fast,
     knob-naming failure instead of a Python-worker OOM (VERDICT r15
     item 7).
 
     Round-16 optimization (VERDICT r15 item 7): the kernel emits each
     unordered pair ONCE (upper triangle, src < dst by the in-kernel id
     sort) and the ordered-pair set the rank rule needs is restored by a
-    cheap JVM projection union before the distinct — half the kernel
-    output rows and Arrow return traffic for one extra narrow map.
-    Pair set law-pinned identical (same law test), stage A/B 0.67 →
-    0.63 s med at sf0.1 (4/5 pairwise, tools/slope_runs/r16/
-    ab_grb_triu.log)."""
+    JVM projection union before the distinct. The union references the
+    `applyInPandas` subtree twice and nothing pins it, so the kernel runs
+    TWICE per table — the triu halves each run's output rows, not the
+    total kernel work or Arrow return traffic. Pair set law-pinned
+    identical (same law test), stage A/B 0.67 → 0.63 s med at sf0.1
+    (4/5 pairwise, tools/slope_runs/r16/ab_grb_triu.log)."""
 
     def pair_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
@@ -3005,10 +3008,11 @@ def _grb_scored_pairs_arrow(nodes):
                     "d": pd.Series([], dtype="int64"),
                 }
             )
-        assert n <= _GRB_OCC_CAP, (
-            f"bucket occupancy {n} exceeds the pair-kernel cap "
-            f"{_GRB_OCC_CAP}; widen the tables (bits ≈ log2(n/B))"
-        )
+        if n > _GRB_OCC_CAP:
+            raise ValueError(
+                f"bucket occupancy {n} exceeds the pair-kernel cap "
+                f"{_GRB_OCC_CAP}; widen the tables (bits ≈ log2(n/B))"
+            )
         order = np.argsort(pdf["vec_id"].to_numpy())
         ids = pdf["vec_id"].to_numpy()[order]
         lvl = pdf["lvl"].to_numpy()[order]

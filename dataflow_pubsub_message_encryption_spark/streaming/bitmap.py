@@ -9,26 +9,25 @@ own (event_type, word) bitmap contribution (map-side partial combine) and
 ORs into the snapshot — any split of the stream into micro-batches folds
 to the identical word table, and replaying a batch changes NOTHING
 (idempotence is free here, unlike the CDC twin's version counter, which
-needs the batch-id journal). This is the classic "exact distinct users so
-far" dashboard state: per-day/per-shard word tables at 100 TB merge with
-one tiny OR pass instead of rescanning the fact history.
+needs the commit log's batch-id skip rule). This is the classic "exact
+distinct users so far" dashboard state: per-day/per-shard word tables at
+100 TB merge with one tiny OR pass instead of rescanning the fact history.
 
-The journal marker is still kept so a replayed batch skips the snapshot
-REWRITE (pure I/O savings); correctness does not depend on it.
+The word table is committed through the commit log (:mod:`.versioned`)
+like every sink, keeping only the live version (``keep=1``); its replay
+skip saves a replayed batch the snapshot REWRITE (pure I/O savings),
+correctness does not depend on it.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._snapshot import marker_value, recover_snapshot, swap_in
+from .versioned import _fold_sink, read_version
 
 _WORD = 62  # keep in lock-step with operators/scale.py::_BM_WORD
-_SNAPSHOT = "words"
-_MARKER = "_last_batch_id"
+_TABLE = "words"
 
 
 def _batch_words(batch_df: DataFrame) -> DataFrame:
@@ -58,26 +57,8 @@ def bitmap_distinct_sink(events: DataFrame, target_dir: str, checkpoint_dir: str
     """Maintain the (event_type, word) bitmap snapshot from a stream.
     Returns the (unstarted) ``DataStreamWriter``; read the counts with
     :func:`bitmap_distinct_view`."""
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        recover_snapshot(target_dir, _SNAPSHOT, _MARKER)
-        if batch_id <= marker_value(target_dir, _MARKER):
-            return  # replayed batch: OR is idempotent, skip the rewrite
-        spark = batch_df.sparkSession
-        cur = os.path.join(target_dir, _SNAPSHOT)
-        snap = spark.read.parquet(cur) if os.path.isdir(cur) else None
-        merged = _merge(snap, _batch_words(batch_df))
-        tmp = os.path.join(target_dir, f".tmp-{batch_id}")
-        merged.write.mode("overwrite").parquet(tmp)
-        # crash-safe swap + marker journal (first-batch vs steady-state
-        # ordering differs — see streaming/_snapshot.py module docstring)
-        swap_in(target_dir, _SNAPSHOT, _MARKER, batch_id)
-
-    os.makedirs(target_dir, exist_ok=True)
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return _fold_sink(
+        events, target_dir, checkpoint_dir, {_TABLE: (_batch_words, _merge)}, keep=1
     )
 
 
@@ -85,7 +66,7 @@ def bitmap_distinct_view(spark: SparkSession, target_dir: str) -> DataFrame:
     """Exact distinct users per event_type, decoded from the word table —
     the same (event_type, n_words, distinct_users) shape as the batch
     operator."""
-    words = spark.read.parquet(os.path.join(target_dir, _SNAPSHOT))
+    words = read_version(spark, target_dir)[_TABLE]
     return words.groupBy("event_type").agg(
         F.count("*").alias("n_words"),
         F.sum(F.bit_count("bm")).cast("long").alias("distinct_users"),

@@ -5,16 +5,18 @@ whole change log to one current row per key. This module maintains the
 SAME state incrementally from an unbounded stream, the way a warehouse
 target table tracks a CDC feed: each micro-batch is reduced to one
 candidate row per key (map-side ``max_by``), merged into the parquet
-snapshot with latest-wins semantics, and the snapshot is swapped
-atomically. Tombstones (``error`` events) are KEPT in the snapshot — a
-delete must be able to supersede an earlier update and be superseded by a
-later one — and filtered only in the read view, exactly like the batch
-operator's final filter.
+snapshot with latest-wins semantics, and the merged snapshot is
+committed as a new version of the target's commit log
+(:mod:`.versioned`). Tombstones (``error`` events) are KEPT in the
+snapshot — a delete must be able to supersede an earlier update and be
+superseded by a later one — and filtered only in the read view, exactly
+like the batch operator's final filter.
 
 Exactly-once: ``foreachBatch`` delivers at-least-once, so a replayed
-batch would double-count ``n_versions``. The standard idempotence recipe
-is applied — the last applied batch_id is journaled next to the snapshot
-and already-applied batches are skipped.
+batch would double-count ``n_versions``. The commit log carries the
+idempotence recipe — every version records its batch_id and a batch at
+or below the committed one is skipped. Only the live version is kept
+(``keep=1``), so the target holds one snapshot on disk.
 
 Scale notes (100 TB): the per-batch merge shuffles one candidate row per
 (map partition, key) — never the raw log — and the rewrite cost is the
@@ -26,15 +28,12 @@ merge); the merge computation itself is unchanged.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._snapshot import marker_value, recover_snapshot, swap_in
+from .versioned import _fold_sink, read_version
 
-_SNAPSHOT = "current"
-_MARKER = "_last_batch_id"
+_TABLE = "current"
 
 _ORD = ("last_ts", "last_event_id")
 
@@ -74,32 +73,14 @@ def cdc_upsert_sink(events: DataFrame, target_dir: str, checkpoint_dir: str):
     """MERGE-style streaming upsert into a parquet snapshot. Returns the
     (unstarted) ``DataStreamWriter``; read the result with
     ``cdc_current_view``."""
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        recover_snapshot(target_dir, _SNAPSHOT, _MARKER)
-        if batch_id <= marker_value(target_dir, _MARKER):
-            return  # replayed batch: already folded in
-        spark = batch_df.sparkSession
-        cur = os.path.join(target_dir, _SNAPSHOT)
-        snap = spark.read.parquet(cur) if os.path.isdir(cur) else None
-        merged = _merge(snap, _batch_contrib(batch_df))
-        tmp = os.path.join(target_dir, f".tmp-{batch_id}")
-        merged.write.mode("overwrite").parquet(tmp)
-        # crash-safe swap + marker journal (first-batch vs steady-state
-        # ordering differs — see streaming/_snapshot.py module docstring)
-        swap_in(target_dir, _SNAPSHOT, _MARKER, batch_id)
-
-    os.makedirs(target_dir, exist_ok=True)
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return _fold_sink(
+        events, target_dir, checkpoint_dir, {_TABLE: (_batch_contrib, _merge)}, keep=1
     )
 
 
 def cdc_current_view(spark: SparkSession, target_dir: str) -> DataFrame:
     """The queryable current state: tombstoned keys dropped, exactly the
     batch operator's final filter."""
-    return spark.read.parquet(os.path.join(target_dir, _SNAPSHOT)).filter(
+    return read_version(spark, target_dir)[_TABLE].filter(
         F.col("last_event_type") != "error"
     )

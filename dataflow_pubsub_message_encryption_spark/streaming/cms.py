@@ -6,11 +6,12 @@ The batch operator (operators/scale.py) folds the stream into a
 split of the input — associative and commutative but **NOT idempotent**
 (unlike the bitmap twin's bit_or): replaying a micro-batch would
 double-count every cell it touched. This twin therefore exists to
-exercise the at-least-once machinery for real — the batch-id marker
-journal is correctness-critical here, and the shared crash-window
-recovery (``_snapshot.recover_snapshot``) must restore a half-swapped
-snapshot WITH its marker so the replayed batch skips instead of
-re-summing (the exact scenario ADVICE r5 flagged and round 6 fixed).
+exercise the at-least-once machinery for real — the commit log's
+batch-id skip rule (:mod:`.versioned`) is correctness-critical here:
+a batch whose version reached the ``_latest`` pointer is skipped on
+replay, and anything a crash left past the pointer is rolled back by
+``recover`` so the replayed batch re-sums exactly once. Only the live
+version is kept (``keep=1``).
 
 Scale notes: the per-batch contribution partial-aggregates map-side to
 ≤ DEPTH×WIDTH cells; the snapshot is a few hundred longs regardless of
@@ -19,16 +20,13 @@ stream length; shard/day sketches union by the same cell-wise SUM.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.scale import _CMS_DEPTH, _CMS_WIDTH
-from ._snapshot import marker_value, recover_snapshot, swap_in
+from .versioned import _fold_sink, read_version
 
-_SNAPSHOT = "cells"
-_MARKER = "_last_batch_id"
+_TABLE = "cells"
 
 
 def _batch_cells(batch_df: DataFrame) -> DataFrame:
@@ -69,29 +67,11 @@ def _merge(snapshot: DataFrame | None, contrib: DataFrame) -> DataFrame:
 def cms_sketch_sink(events: DataFrame, target_dir: str, checkpoint_dir: str):
     """Maintain the CMS cell grid from a stream. Returns the (unstarted)
     ``DataStreamWriter``; read estimates with :func:`cms_grid_view`."""
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        recover_snapshot(target_dir, _SNAPSHOT, _MARKER)
-        if batch_id <= marker_value(target_dir, _MARKER):
-            return  # replayed batch: SUM is NOT idempotent — skip
-        spark = batch_df.sparkSession
-        cur = os.path.join(target_dir, _SNAPSHOT)
-        snap = spark.read.parquet(cur) if os.path.isdir(cur) else None
-        merged = _merge(snap, _batch_cells(batch_df))
-        tmp = os.path.join(target_dir, f".tmp-{batch_id}")
-        merged.write.mode("overwrite").parquet(tmp)
-        # crash-safe swap + marker journal (first-batch vs steady-state
-        # ordering differs — see streaming/_snapshot.py module docstring)
-        swap_in(target_dir, _SNAPSHOT, _MARKER, batch_id)
-
-    os.makedirs(target_dir, exist_ok=True)
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
+    return _fold_sink(
+        events, target_dir, checkpoint_dir, {_TABLE: (_batch_cells, _merge)}, keep=1
     )
 
 
 def cms_grid_view(spark: SparkSession, target_dir: str) -> DataFrame:
     """The maintained (i, p, c) counter grid."""
-    return spark.read.parquet(os.path.join(target_dir, _SNAPSHOT))
+    return read_version(spark, target_dir)[_TABLE]

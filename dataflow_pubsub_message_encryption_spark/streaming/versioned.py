@@ -1,4 +1,5 @@
-"""Minimal local commit-log table format (VERDICT r8 'missing' item 4).
+"""Minimal local commit-log table format — the engine's one commit
+protocol for the streaming sinks.
 
 Delta/Iceberg are unavailable offline; this module implements the part
 of a transactional table format the engine's sinks actually need — an
@@ -20,6 +21,11 @@ root pointer — so a streaming MERGE target gets:
   parent, so dropping is exactly-once; rolling forward would have to
   prove the snapshot write finished, which only the pointer attests).
 
+Every foreachBatch sink folds through :func:`_fold_sink`: the cdc,
+bitmap and cms sinks each declare one table and keep only the live
+version (``keep=1``); :func:`versioned_upsert_sink` declares two and
+keeps the full history.
+
 Layout::
 
     target/
@@ -33,14 +39,15 @@ Crash points (drilled in tests/test_streaming_r9.py):
       v-dir, both dropped; replay redoes the batch from the committed
       parent;
   (c) mid-pointer-write                      -> write-aside + replace
-      means the pointer is never torn; the aside file is swept.
+      means the pointer is never torn; the aside file is swept;
+  (d) mid-vacuum, after the log entry went   -> a v-dir no log entry
+      names, at or below the pointer; dropped.
 
 Scale notes: a commit costs one snapshot write + two tiny journaled
-files — the same cost profile as the umbrella swap (cdc_multi), plus
-retained history. Version retention is the user's vacuum policy
-(``vacuum`` keeps the newest K); on 100 TB targets the member tables
-partition by key range so a batch rewrites only touched partitions —
-orthogonal to the log, exactly as in cdc.py.
+files, plus whatever history is retained. Version retention is the
+vacuum policy (``vacuum`` keeps the newest K); on 100 TB targets the
+member tables partition by key range so a batch rewrites only touched
+partitions — orthogonal to the log, exactly as in cdc.py.
 """
 
 from __future__ import annotations
@@ -53,6 +60,7 @@ import socket
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _LATEST = "_latest"
 _LOG = "_log"
@@ -150,7 +158,8 @@ class LiveClaim(Exception):
 
 def recover(target_dir: str, *, force: bool = False) -> None:
     """Roll back anything past the committed pointer: uncommitted log
-    entries, orphan v-dirs, version claims, torn write-asides.
+    entries, orphan v-dirs, version claims, torn write-asides — and drop
+    v-dirs a killed :func:`vacuum` unlogged but never removed.
     Re-runnable (each rule re-derives the same state). Recovery is a
     QUIESCED operation — no live writer may hold a claim while it runs
     (the same scoping every table format gives its maintenance ops):
@@ -224,8 +233,11 @@ def recover(target_dir: str, *, force: bool = False) -> None:
         base = os.path.basename(d)
         if not os.path.isdir(d) or not base[1:].isdigit():
             continue
-        if int(base[1:]) > n:
-            shutil.rmtree(d, ignore_errors=True)  # orphan snapshot
+        # orphan snapshot: above the pointer (uncommitted, its log entry
+        # was just dropped) or at/below it with its log entry already
+        # vacuumed (a vacuum killed between its two removals)
+        if not os.path.exists(_log_path(target_dir, int(base[1:]))):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 class CommitConflict(Exception):
@@ -335,25 +347,35 @@ def vacuum(target_dir: str, keep: int) -> list[int]:
     ``_latest`` pointer and wedge the replay skip rule."""
     keep = max(1, keep)
     n = latest_version(target_dir)
-    dropped = []
-    for v in range(max(0, n - keep + 1)):
-        p = _log_path(target_dir, v)
-        if os.path.exists(p):
-            os.remove(p)
-            shutil.rmtree(
-                os.path.join(target_dir, f"v{v}"), ignore_errors=True
-            )
-            dropped.append(v)
+    # list the retained log rather than probing every version since v0:
+    # the fold sinks vacuum after every batch, so the cost must not grow
+    # with the stream's age
+    retained = sorted(
+        int(os.path.basename(p)[1:-5])
+        for p in glob.glob(os.path.join(target_dir, _LOG, "v*.json"))
+    )
+    dropped = [v for v in retained if v <= n - keep]
+    for v in dropped:
+        # log entry first: a kill before the rmtree leaves a v-dir no
+        # entry names, which recover() drops (crash point (d))
+        os.remove(_log_path(target_dir, v))
+        shutil.rmtree(os.path.join(target_dir, f"v{v}"), ignore_errors=True)
     return dropped
 
 
-def versioned_upsert_sink(
-    events: DataFrame, target_dir: str, checkpoint_dir: str
+def _fold_sink(
+    events: DataFrame,
+    target_dir: str,
+    checkpoint_dir: str,
+    folds,  # dict[str, (contrib, merge)]: table -> fold over the batch
+    keep: int | None,
 ):
-    """The cdc_multi two-table MERGE retargeted at the commit log: each
-    micro-batch commits a NEW immutable version of (users, totals) —
-    atomic across both tables, time-travelable, exactly-once under
-    replay. Returns the unstarted ``DataStreamWriter``.
+    """foreachBatch fold of every micro-batch into one new committed
+    version. ``folds`` maps each member table to ``(contrib, merge)``:
+    ``contrib(batch_df)`` reduces the batch to its keyed contribution and
+    ``merge(parent_or_None, contrib)`` folds it into the parent version's
+    table. After each commit ``vacuum(keep)`` runs; ``keep=None`` retains
+    the full history. Returns the unstarted ``DataStreamWriter``.
 
     Concurrency scoping (honest): the CAS in :func:`commit` makes the
     COMMIT PRIMITIVE multi-writer safe (tested two-writer), but THIS
@@ -364,8 +386,6 @@ def versioned_upsert_sink(
     target must call ``commit(parent=...)`` directly and run recovery
     only quiesced, the same discipline every table format demands of
     its maintenance ops."""
-    from .cdc import _batch_contrib, _merge
-    from .cdc_multi import _totals_contrib, _totals_merge
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         recover(target_dir)
@@ -385,31 +405,25 @@ def versioned_upsert_sink(
             if batch_id <= committed_batch_id(target_dir):
                 return  # replayed batch: version already committed
             parent = latest_version(target_dir)
-            cur = (
-                read_version(spark, target_dir, parent)
-                if parent >= 0
-                else {"users": None, "totals": None}
-            )
-            users = _merge(cur["users"], _batch_contrib(batch_df))
-            totals = _totals_merge(
-                cur["totals"], _totals_contrib(batch_df)
-            )
+            cur = read_version(spark, target_dir, parent) if parent >= 0 else {}
+            merged = {
+                t: merge(cur.get(t), contrib(batch_df))
+                for t, (contrib, merge) in folds.items()
+            }
 
             def write_tables(vdir: str) -> dict[str, str]:
-                users.write.mode("overwrite").parquet(
-                    os.path.join(vdir, "users")
-                )
-                totals.write.mode("overwrite").parquet(
-                    os.path.join(vdir, "totals")
-                )
                 base = os.path.basename(vdir)
-                return {"users": f"{base}/users", "totals": f"{base}/totals"}
+                for t, df in merged.items():
+                    df.write.mode("overwrite").parquet(os.path.join(vdir, t))
+                return {t: f"{base}/{t}" for t in merged}
 
             try:
                 commit(target_dir, batch_id, write_tables, parent=parent)
-                return
             except CommitConflict:
                 continue
+            if keep is not None:
+                vacuum(target_dir, keep)
+            return
         raise CommitConflict(
             f"batch {batch_id}: gave up after 5 contended commit attempts"
         )
@@ -419,4 +433,43 @@ def versioned_upsert_sink(
         events.writeStream.foreachBatch(merge_batch)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
+    )
+
+
+def _totals_contrib(batch_df: DataFrame) -> DataFrame:
+    return batch_df.groupBy("event_type").agg(
+        F.count("*").alias("n"), F.sum("value").alias("value_sum")
+    )
+
+
+def _totals_merge(snapshot: DataFrame | None, contrib: DataFrame) -> DataFrame:
+    if snapshot is None:
+        return contrib
+    return (
+        snapshot.unionByName(contrib)
+        .groupBy("event_type")
+        .agg(F.sum("n").alias("n"), F.sum("value_sum").alias("value_sum"))
+    )
+
+
+def versioned_upsert_sink(
+    events: DataFrame, target_dir: str, checkpoint_dir: str
+):
+    """Two-table CDC MERGE on the commit log: each micro-batch commits a
+    NEW immutable version of ``users`` (latest-wins row per user — the
+    cdc.py merge) and ``totals`` (per-event-type count + value sum — a
+    non-idempotent SUM merge, the hardest replay case), atomic across
+    both tables, exactly-once under replay, with the full history kept
+    for time travel. Returns the unstarted ``DataStreamWriter``."""
+    from .cdc import _batch_contrib, _merge  # cdc imports this module
+
+    return _fold_sink(
+        events,
+        target_dir,
+        checkpoint_dir,
+        {
+            "users": (_batch_contrib, _merge),
+            "totals": (_totals_contrib, _totals_merge),
+        },
+        keep=None,
     )

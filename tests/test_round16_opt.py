@@ -141,3 +141,26 @@ def test_gr_edges_pd_equals_recomputed_distance(spark, fixture):
             assert truth[r.dst] == r.pd, (l, r.src, r.dst, r.pd)
             checked += 1
     assert checked, "fixture admits no edges — law would be vacuous"
+
+
+def test_grb_occupancy_cap_raises_naming_the_cap(spark, monkeypatch):
+    """A bucket over `_GRB_OCC_CAP` must fail with a ValueError that names
+    the cap — an explicit raise, so the guard survives `python -O`. The
+    cap is set one below the fixture's largest bucket; the kernel closure
+    captures it when the pandas UDF is built."""
+    from dataflow_pubsub_message_encryption_spark.operators import similarity as S
+    from dataflow_pubsub_message_encryption_spark.sources import load
+
+    e = load(spark, FIXTURES[0], "embeddings")
+    nodes = S._gr_nodes(
+        e.filter(F.col("vec_id") != S._PROBE_ID), blocked=True
+    ).localCheckpoint()
+    largest = max(
+        nodes.groupBy(f"b{i}").count().agg(F.max("count")).first()[0]
+        for i in range(1, len(S._GRB_TABLES) + 1)
+    )
+    assert largest >= 3, "fixture buckets too small to exercise the cap"
+    cap = largest - 1
+    monkeypatch.setattr(S, "_GRB_OCC_CAP", cap)
+    with pytest.raises(Exception, match=f"exceeds the pair-kernel cap {cap}"):
+        S._grb_scored_pairs_arrow(nodes).collect()

@@ -685,6 +685,13 @@ def test_cdc_upsert_stream_equals_batch(spark, sf_dir, tmpdir):
         cdc_current_view,
         cdc_upsert_sink,
     )
+    from dataflow_pubsub_message_encryption_spark.streaming.versioned import history
+
+    def assert_one_live_version():
+        # keep=1 retention: one committed version, one snapshot dir on disk
+        assert len(history(target)) == 1
+        vdirs = [d for d in os.listdir(target) if d[:1] == "v" and d[1:].isdigit()]
+        assert len(vdirs) == 1, vdirs
 
     tbl = pq.read_table(glob.glob(f"{sf_dir}/events.parquet")[0])
     n = tbl.num_rows
@@ -716,6 +723,7 @@ def test_cdc_upsert_stream_equals_batch(spark, sf_dir, tmpdir):
         for r in CQ["cdc_upsert_latest"](spark, sf_dir).collect()
     }
     assert got == batch
+    assert_one_live_version()
 
     # restart from the same checkpoint: no new files -> state unchanged
     q2 = cdc_upsert_sink(
@@ -726,6 +734,7 @@ def test_cdc_upsert_stream_equals_batch(spark, sf_dir, tmpdir):
         r.user_id: r.n_versions for r in cdc_current_view(spark, target).collect()
     }
     assert again == {u: v[3] for u, v in got.items()}
+    assert_one_live_version()
 
 
 def test_session_window_stream_equals_batch_sessions(spark, sf_dir, tmpdir):
@@ -1010,94 +1019,6 @@ def test_bitmap_distinct_stream_equals_batch(spark, sf_dir, tmpdir):
     assert again == batch
 
 
-def test_snapshot_swap_crash_recovery(tmpdir):
-    """A crash between rename(cur, old) and rename(tmp, cur) must not lose
-    state: recover_snapshot restores the complete post-merge tmp AND
-    journals its batch id (so non-idempotent merges like cdc's
-    sum(n_versions) don't fold the replayed batch in twice)."""
-    import os
-
-    from dataflow_pubsub_message_encryption_spark.streaming._snapshot import (
-        recover_snapshot,
-    )
-
-    def mkdir_with(path, sentinel):
-        os.makedirs(path)
-        open(os.path.join(path, sentinel), "w").write(sentinel)
-
-    # crash window: cur gone, old-6 (pre-merge) + tmp-6 (post-merge) both left
-    t1 = f"{tmpdir}/t1"
-    mkdir_with(f"{t1}/.old-6", "pre")
-    mkdir_with(f"{t1}/.tmp-6", "post")
-    open(f"{t1}/_last_batch_id", "w").write("5")
-    recover_snapshot(t1, "words", "_last_batch_id")
-    assert os.path.exists(f"{t1}/words/post"), "post-merge tmp not restored"
-    assert open(f"{t1}/_last_batch_id").read() == "6", "marker not journaled"
-    assert not os.path.exists(f"{t1}/.old-6") and not os.path.exists(f"{t1}/.tmp-6")
-
-    # defensive fallback: only a pre-merge old survives -> restore, keep marker
-    t2 = f"{tmpdir}/t2"
-    mkdir_with(f"{t2}/.old-3", "pre")
-    open(f"{t2}/_last_batch_id", "w").write("2")
-    recover_snapshot(t2, "words", "_last_batch_id")
-    assert os.path.exists(f"{t2}/words/pre")
-    assert open(f"{t2}/_last_batch_id").read() == "2", "marker must stay pre-merge"
-
-    # healthy snapshot: stale leftovers from an interrupted write are dropped
-    # and the marker is untouched (the merge never landed)
-    t3 = f"{tmpdir}/t3"
-    mkdir_with(f"{t3}/words", "live")
-    mkdir_with(f"{t3}/.tmp-9", "partial")
-    open(f"{t3}/_last_batch_id", "w").write("8")
-    recover_snapshot(t3, "words", "_last_batch_id")
-    assert os.path.exists(f"{t3}/words/live") and not os.path.exists(f"{t3}/.tmp-9")
-    assert open(f"{t3}/_last_batch_id").read() == "8"
-
-    # crash AFTER the swap but before marker write: cur is the post-merge
-    # snapshot, .old-{b} survives as the only evidence — the marker must be
-    # journaled to b before dropping it, or the replayed batch re-merges
-    # into a snapshot that already contains it (double-count for SUM merges)
-    t5 = f"{tmpdir}/t5"
-    mkdir_with(f"{t5}/words", "post")
-    mkdir_with(f"{t5}/.old-6", "pre")
-    open(f"{t5}/_last_batch_id", "w").write("5")
-    recover_snapshot(t5, "words", "_last_batch_id")
-    assert os.path.exists(f"{t5}/words/post") and not os.path.exists(f"{t5}/.old-6")
-    assert open(f"{t5}/_last_batch_id").read() == "6", "swap-complete marker not journaled"
-
-    # first-batch crash BEFORE the marker write: no old witness and no
-    # marker proof, so the tmp may be a torn parquet write — it must be
-    # dropped (the replay redoes batch 0 from empty, exactly once); under
-    # the pre-round-7 protocol this state was restored + journaled, which
-    # silently accepted torn first-batch writes
-    t4 = f"{tmpdir}/t4"
-    mkdir_with(f"{t4}/.tmp-0", "post")
-    recover_snapshot(t4, "words", "_last_batch_id")
-    assert not os.path.exists(f"{t4}/words"), "unproven first-batch tmp restored"
-    assert not os.path.exists(f"{t4}/_last_batch_id")
-    assert not os.path.exists(f"{t4}/.tmp-0")
-
-    # first-batch crash AFTER the marker write (marker == tmp batch proves
-    # the tmp complete — swap_in journals only after the parquet write):
-    # restore and keep the marker, so the replayed batch 0 skips
-    t6 = f"{tmpdir}/t6"
-    mkdir_with(f"{t6}/.tmp-0", "post")
-    open(f"{t6}/_last_batch_id", "w").write("0")
-    recover_snapshot(t6, "words", "_last_batch_id")
-    assert os.path.exists(f"{t6}/words/post")
-    assert open(f"{t6}/_last_batch_id").read() == "0"
-
-    # torn marker journal: the write-aside file is never the source of
-    # truth and must be cleaned up
-    t7 = f"{tmpdir}/t7"
-    mkdir_with(f"{t7}/words", "live")
-    open(f"{t7}/_last_batch_id", "w").write("3")
-    open(f"{t7}/_last_batch_id.w", "w").write("4")
-    recover_snapshot(t7, "words", "_last_batch_id")
-    assert not os.path.exists(f"{t7}/_last_batch_id.w")
-    assert open(f"{t7}/_last_batch_id").read() == "3"
-
-
 def test_stateful_v2_env_boundary_is_exactly_protobuf():
     """Pin the (round-7 unblocked) env boundary: the ONLY thing between
     this container and the transformWithStateInPandas e2e path is a
@@ -1221,104 +1142,20 @@ def test_cms_sketch_stream_equals_batch_grid(spark, sf_dir, tmpdir):
     again = {(r.i, r.p): r.c for r in cms_grid_view(spark, target).collect()}
     assert again == want, "checkpoint restart double-counted cells"
 
-
-def test_snapshot_swap_every_crash_point_converges(tmpdir):
-    """Exhaustive crash-point drill for the swap protocol, mirroring the
-    sinks' REAL merge_batch sequence (recover_snapshot preamble,
-    marker_value skip rule, the isdir guard, and swap_in's two orderings)
-    step for step. Two scenarios:
-
-    - steady state (prior snapshot + marker present): crash after each of
-      (tmp dir created/torn, tmp written, rename cur->old, rename
-      tmp->cur, journal marker, rmtree old) must converge to exactly one
-      application of batch 7 on top of batch 6, marker = 7, no leftovers;
-    - BOOTSTRAP (no snapshot, no marker — the round-6 ADVICE hole): crash
-      after each of (tmp dir created/torn, tmp written, journal marker,
-      rename tmp->cur) must converge to exactly one application of batch
-      0 ('+b0', never '+b0+b0'), marker = 0, no leftovers.
-
-    Recovery is additionally run TWICE on replay (it must be
-    re-runnable — a crash inside recovery is just another crash point).
-    """
-    import os
-    import shutil
-
-    from dataflow_pubsub_message_encryption_spark.streaming._snapshot import (
-        _journal,
-        marker_value,
-        recover_snapshot,
+    # crash after the sink committed its version but before the engine
+    # logged the batch done: drop the engine's last commit marker, so the
+    # restart really re-runs that batch id — the sink must skip it
+    last = max(
+        int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit()
     )
-
-    def write_dir(path, content):
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "state"), "w") as fh:
-            fh.write(content)
-
-    def read_dir(path):
-        with open(os.path.join(path, "state")) as fh:
-            return fh.read()
-
-    DONE = 99
-
-    def apply_batch(root, batch_id, crash_after):
-        """One merge_batch for `batch_id` ('+b{id}' appended to state),
-        stopping after the named step (DONE = run to completion). Steps
-        mirror merge_batch + swap_in exactly; step numbering follows the
-        branch actually taken (steady: 0-5, bootstrap: 0-3)."""
-        recover_snapshot(root, "snap", "_m")
-        if batch_id <= marker_value(root, "_m"):
-            return  # replay skip — same rule as the sinks
-        cur = os.path.join(root, "snap")
-        tmp = os.path.join(root, f".tmp-{batch_id}")
-        merged = (read_dir(cur) if os.path.isdir(cur) else "") + f"+b{batch_id}"
-        os.makedirs(tmp, exist_ok=True)
-        if crash_after == 0:
-            return  # torn tmp write: dir exists, content missing
-        write_dir(tmp, merged)
-        if crash_after == 1:
-            return
-        # --- mirror of swap_in ---
-        if os.path.isdir(cur):
-            old = os.path.join(root, f".old-{batch_id}")
-            os.rename(cur, old)
-            if crash_after == 2:
-                return
-            os.rename(tmp, cur)
-            if crash_after == 3:
-                return
-            _journal(root, "_m", batch_id)
-            if crash_after == 4:
-                return
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            _journal(root, "_m", batch_id)
-            if crash_after == 2:
-                return
-            os.rename(tmp, cur)
-
-    def replay_and_check(root, batch_id, want_state, tag):
-        recover_snapshot(root, "snap", "_m")
-        recover_snapshot(root, "snap", "_m")  # recovery is re-runnable
-        apply_batch(root, batch_id, DONE)
-        recover_snapshot(root, "snap", "_m")
-        assert read_dir(f"{root}/snap") == want_state, tag
-        assert open(f"{root}/_m").read() == str(batch_id), tag
-        leftovers = [p for p in os.listdir(root) if p.startswith(".")]
-        assert not leftovers, f"{tag}: {leftovers}"
-
-    # steady state: batch 7 lands on batch 6's snapshot
-    for crash_after in (0, 1, 2, 3, 4, 5, DONE):
-        root = f"{tmpdir}/steady{crash_after}"
-        write_dir(f"{root}/snap", "+b6")
-        with open(f"{root}/_m", "w") as fh:
-            fh.write("6")
-        apply_batch(root, 7, crash_after)  # crash here
-        replay_and_check(root, 7, "+b6+b7", f"steady crash@{crash_after}")
-
-    # bootstrap: batch 0 lands on NOTHING — no old witness can exist, so
-    # the marker-before-rename ordering is what prevents '+b0+b0'
-    for crash_after in (0, 1, 2, 3, DONE):
-        root = f"{tmpdir}/boot{crash_after}"
-        os.makedirs(root)
-        apply_batch(root, 0, crash_after)  # crash here
-        replay_and_check(root, 0, "+b0", f"bootstrap crash@{crash_after}")
+    os.remove(f"{ckpt}/commits/{last}")
+    os.remove(f"{ckpt}/commits/.{last}.crc")
+    q3 = cms_sketch_sink(
+        st.events_file_stream(spark, src, max_files_per_trigger=1), target, ckpt
+    ).trigger(availableNow=True).start()
+    q3.awaitTermination(120)
+    assert q3.lastProgress["batchId"] == last, "batch was not replayed"
+    replayed = {
+        (r.i, r.p): r.c for r in cms_grid_view(spark, target).collect()
+    }
+    assert replayed == want, "replayed batch double-counted cells"

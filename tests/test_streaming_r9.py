@@ -1,7 +1,7 @@
 """Round-9 streaming surface tests (VERDICT r8 items 3/4/5/7): the
 custom Python streaming DataSource with at-least-once redelivery, the
-event-time-timer session processor, and the multi-table-consistent
-snapshot swap. The left-outer interval join (item 3) is covered in
+event-time-timer session processor, and the multi-table commit-log
+sink. The left-outer interval join (item 3) is covered in
 test_streaming.py via the refactored pipeline function."""
 
 from __future__ import annotations
@@ -112,136 +112,6 @@ def test_pubsub_replay_source_at_least_once_and_dedup(spark, sf_dir, tmpdir):
     assert len(deduped) == n
 
 
-# --- item 7: multi-table-consistent snapshot swap ---------------------------
-
-
-def test_multi_table_sink_stream_equals_batch(spark, sf_dir, tmpdir):
-    """Both member tables of the umbrella snapshot, after a 2-file
-    replay, equal their batch forms — and satisfy the cross-table
-    invariant (same batch prefix folded into both)."""
-    src = f"{tmpdir}/src"
-    _stage_split(sf_dir, src, 2)
-    target = f"{tmpdir}/target"
-    q = (
-        st.multi_upsert_sink(
-            st.events_file_stream(spark, src), target, f"{tmpdir}/ckpt"
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-
-    tables = st.multi_current_view(spark, target)
-    ev = load_events(spark, sf_dir)
-
-    ordk = F.struct("ts", "event_id")
-    batch_users = {
-        (r.user_id, r.last_event_id, r.n_versions)
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.max_by("event_id", ordk).alias("last_event_id"),
-            F.count("*").alias("n_versions"),
-        )
-        .collect()
-    }
-    got_users = {
-        (r.user_id, r.last_event_id, r.n_versions)
-        for r in tables["users"].collect()
-    }
-    assert got_users == batch_users
-
-    batch_totals = {
-        (r.event_type, r.n, round(r.value_sum, 6))
-        for r in ev.groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("value_sum"))
-        .collect()
-    }
-    got_totals = {
-        (r.event_type, r.n, round(r.value_sum, 6))
-        for r in tables["totals"].collect()
-    }
-    assert got_totals == batch_totals
-
-    # cross-table atomicity invariant: both tables reflect the same
-    # event prefix (here: the whole log)
-    n_users = sum(r.n_versions for r in tables["users"].collect())
-    n_totals = sum(r.n for r in tables["totals"].collect())
-    assert n_users == n_totals == ev.count()
-
-
-def test_multi_table_crash_drill_four_states(tmpdir):
-    """The 4-state × N-table replay drill (VERDICT r8 item 7): because
-    the N tables are children of ONE snapshot dir, every recovery state
-    must restore or drop them TOGETHER — after recover_snapshot, both
-    members carry the same batch tag, never a mix."""
-    from dataflow_pubsub_message_encryption_spark.streaming._snapshot import (
-        marker_value,
-        recover_snapshot,
-    )
-
-    def mk_umbrella(path, tag):
-        for table in ("users", "totals"):
-            os.makedirs(os.path.join(path, table))
-            with open(os.path.join(path, table, "tag"), "w") as fh:
-                fh.write(tag)
-
-    def tags(cur):
-        return {
-            t: open(os.path.join(cur, t, "tag")).read()
-            for t in ("users", "totals")
-        }
-
-    # state 1: crash between the two renames — cur gone, .old-6 (pre) and
-    # .tmp-6 (post, proven complete by the old witness) both present:
-    # the POST umbrella must come back whole, marker journaled to 6
-    t1 = f"{tmpdir}/t1"
-    mk_umbrella(f"{t1}/.old-6", "pre-b6")
-    mk_umbrella(f"{t1}/.tmp-6", "post-b6")
-    with open(f"{t1}/_m", "w") as fh:
-        fh.write("5")
-    recover_snapshot(t1, "current", "_m")
-    assert tags(f"{t1}/current") == {"users": "post-b6", "totals": "post-b6"}
-    assert marker_value(t1, "_m") == 6
-
-    # state 2: crash after swap, before marker/cleanup — cur is post,
-    # .old-6 leftover: marker journaled forward, members untouched
-    t2 = f"{tmpdir}/t2"
-    mk_umbrella(f"{t2}/current", "post-b6")
-    mk_umbrella(f"{t2}/.old-6", "pre-b6")
-    with open(f"{t2}/_m", "w") as fh:
-        fh.write("5")
-    recover_snapshot(t2, "current", "_m")
-    assert tags(f"{t2}/current") == {"users": "post-b6", "totals": "post-b6"}
-    assert marker_value(t2, "_m") == 6
-    assert not os.path.exists(f"{t2}/.old-6")
-
-    # state 3: crash mid-staging — healthy cur + a HALF-written tmp
-    # (only one member landed): the torn umbrella is dropped whole, the
-    # live pair stays consistent
-    t3 = f"{tmpdir}/t3"
-    mk_umbrella(f"{t3}/current", "b5")
-    os.makedirs(f"{t3}/.tmp-6/users")
-    with open(f"{t3}/.tmp-6/users/tag", "w") as fh:
-        fh.write("post-b6")  # totals/ never written — torn
-    with open(f"{t3}/_m", "w") as fh:
-        fh.write("5")
-    recover_snapshot(t3, "current", "_m")
-    assert tags(f"{t3}/current") == {"users": "b5", "totals": "b5"}
-    assert marker_value(t3, "_m") == 5
-    assert not os.path.exists(f"{t3}/.tmp-6")
-
-    # state 4: first-batch crash before the marker — the unproven tmp may
-    # be torn (here it IS: one member only) and must be dropped whole
-    t4 = f"{tmpdir}/t4"
-    os.makedirs(f"{t4}/.tmp-0/users")
-    with open(f"{t4}/.tmp-0/users/tag", "w") as fh:
-        fh.write("post-b0")
-    recover_snapshot(t4, "current", "_m")
-    assert not os.path.exists(f"{t4}/current")
-    assert not os.path.exists(f"{t4}/.tmp-0")
-    assert marker_value(t4, "_m") == -1
-
-
 # --- commit-log table format (VERDICT r8 'missing' item 4) ------------------
 
 
@@ -301,6 +171,24 @@ def test_versioned_commit_log_end_to_end_with_time_travel(
     }
     assert got == batch
 
+    batch_totals = {
+        (r.event_type, r.n, round(r.value_sum, 6))
+        for r in ev.groupBy("event_type")
+        .agg(F.count("*").alias("n"), F.sum("value").alias("value_sum"))
+        .collect()
+    }
+    got_totals = {
+        (r.event_type, r.n, round(r.value_sum, 6))
+        for r in final["totals"].collect()
+    }
+    assert got_totals == batch_totals
+
+    # cross-table atomicity invariant at the latest: both tables reflect
+    # the same event prefix (here: the whole log)
+    n_users = sum(r.n_versions for r in final["users"].collect())
+    n_totals = sum(r.n for r in final["totals"].collect())
+    assert n_users == n_totals == ev.count()
+
     # vacuum keeps the newest 2; time travel to v1/v2 still serves,
     # history shrinks, the latest is untouched
     assert V.vacuum(target, keep=2) == [0]
@@ -313,7 +201,8 @@ def test_versioned_commit_log_crash_drill(tmpdir):
     """Roll-back recovery at every crash point: the pointer is the only
     commit witness; anything past it (orphan v-dirs, uncommitted log
     entries, torn write-asides) is dropped so the replayed batch redoes
-    the merge from the committed parent — never roll-forward."""
+    the merge from the committed parent — never roll-forward. A v-dir a
+    killed vacuum left behind (no log entry names it) is dropped too."""
     import json
 
     from dataflow_pubsub_message_encryption_spark.streaming import versioned as V
@@ -364,9 +253,20 @@ def test_versioned_commit_log_crash_drill(tmpdir):
     assert not os.path.exists(f"{t}/_log/v9.json.w")
     assert V.latest_version(t) == 0
 
+    # (d) crash mid-vacuum: batch 1 committed v1, then vacuum(keep=1)
+    # removed v0's log entry and was killed before its rmtree -> the
+    # v-dir below the pointer that no log entry names is dropped; the
+    # committed latest is untouched
+    commit_fs(1, 1)
+    os.remove(f"{t}/_log/v0.json")
+    V.recover(t)
+    assert not os.path.exists(f"{t}/v0")
+    assert os.path.exists(f"{t}/v1/users/part")
+    assert V.latest_version(t) == 1 and V.committed_batch_id(t) == 1
+
     # recovery is re-runnable: a second pass re-derives the same state
     V.recover(t)
-    assert V.latest_version(t) == 0 and V.committed_batch_id(t) == 0
+    assert V.latest_version(t) == 1 and V.committed_batch_id(t) == 1
 
 
 # --- item 4: event-time timers in transformWithStateInPandas ----------------
