@@ -41,6 +41,7 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -1596,6 +1597,9 @@ def rfm_segmentation_scalable(spark, sf_dir):
         .localCheckpoint()
     )
 
+    # the pool threads keep the caller's Spark context (job group, local
+    # properties); a bare pool thread would run its jobs outside it
+    @inheritable_thread_target(spark)
     def score(order_col, name):
         ranked, n = _global_rank(
             per_cust.select("o_custkey", order_col.alias("_k")),

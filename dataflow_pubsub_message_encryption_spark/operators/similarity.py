@@ -22,6 +22,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -43,6 +44,33 @@ _N_PLANES = 8
 # escape, same reasoning as graph_pagerank_int).
 _CENT_SCALE = 1_000_000
 
+
+def _quantize(col):
+    """The fixed-point format: each component of the array column ``col``
+    as round(x * _CENT_SCALE) int64. The only place the engine spells it
+    out (tests/test_lint.py keeps it that way)."""
+    return F.transform(
+        as_double(col), lambda x: F.round(x * _CENT_SCALE).cast("long")
+    )
+
+
+def _dequantize(col):
+    """Fixed-point array column ``col`` back to exact double components."""
+    return F.transform(col, lambda q: q.cast("double") / _CENT_SCALE)
+
+
+def _quantized(e, *keep):
+    """The pinned (vec_id, *keep, de, qe) vector table the Lloyd family
+    works on: ``de`` the double components, ``qe`` their fixed-point
+    form."""
+    return e.select(
+        "vec_id",
+        *keep,
+        as_double("embedding").alias("de"),
+        _quantize("embedding").alias("qe"),
+    ).localCheckpoint(eager=True)
+
+
 _CENT_SQL = f"""cent AS (
       SELECT label AS c_label, list(cq ORDER BY pos) AS centroid
       FROM (
@@ -61,11 +89,10 @@ def _int_centroids(e):
     """Per-label centroids from fixed-point component sums (see
     _CENT_SCALE): quantize -> integer sum -> one double division, then
     re-assemble position-sorted centroid arrays."""
-    q = F.round(F.col("x") * _CENT_SCALE).cast("long")
     return (
-        e.select("label", F.posexplode(as_double("embedding")).alias("pos", "x"))
+        e.select("label", F.posexplode(_quantize("embedding")).alias("pos", "q"))
         .groupBy("label", "pos")
-        .agg((F.sum(q).cast("double") / F.count("*")).alias("cx"))
+        .agg((F.sum("q").cast("double") / F.count("*")).alias("cx"))
         .groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "cx"))).alias("pairs"))
         .select(
@@ -486,7 +513,7 @@ def _km_assign(e_q, cents):
     sampled-IVF build's cost); this fold is kept as the law-test twin —
     tests pin fold ≡ Arrow on every (vec_id, cell) at both graded
     fixtures, which is what lets the Arrow stage claim exactness."""
-    cd = F.transform("cq", lambda q: q.cast("double") / _CENT_SCALE)
+    cd = _dequantize("cq")
     return (
         e_q.join(F.broadcast(cents))
         .select(
@@ -570,28 +597,61 @@ def _km_assign_arrow(e_q, cents):
     )
 
 
-def _km_update(assign, e_q):
-    """Fixed-point centroid update: per-(cell, pos) integer sums, one
-    floored double division, re-assembled as position-sorted arrays."""
+def _floor_mean(df, keys, arr, out):
+    """Per-``keys`` floored integer mean of the int64 array column ``arr``:
+    per-(keys, pos) integer sums, one floored double division, re-assembled
+    as the position-sorted array ``out``. Integer sums commute, so the
+    mean is accumulation-order-free (see _CENT_SCALE)."""
     return (
-        assign.alias("a")
-        .join(e_q.alias("v"), F.col("a.vec_id") == F.col("v.vec_id"))
-        .select("a.cell", F.posexplode("v.qe").alias("pos", "q"))
-        .groupBy("cell", "pos")
+        df.select(*keys, F.posexplode(arr).alias("pos", "q"))
+        .groupBy(*keys, "pos")
         .agg(
             F.floor(F.sum("q").cast("double") / F.count("*"))
             .cast("long")
-            .alias("cq1")
+            .alias("fm")
         )
-        .groupBy("cell")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cq1"))).alias("p"))
-        .select("cell", F.transform("p", lambda s: s.getField("cq1")).alias("cq"))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "fm"))).alias("p"))
+        .select(*keys, F.transform("p", lambda s: s.getField("fm")).alias(out))
+    )
+
+
+def _km_update(assign, e_q):
+    """Fixed-point centroid update: each cell's floored integer mean."""
+    members = (
+        assign.alias("a")
+        .join(e_q.alias("v"), F.col("a.vec_id") == F.col("v.vec_id"))
+        .select("a.cell", "v.qe")
+    )
+    return _floor_mean(members, ["cell"], "qe", "cq")
+
+
+def _km_lloyd(e_q, cents):
+    """``_KM_ITERS`` distributed Lloyd rounds from the seed table ``cents``:
+    Arrow assignment + fixed-point update. Each round's K-row table is
+    pinned eagerly, which keeps the plan shallow and lets the trained
+    table's consumers reuse it instead of re-running the lineage."""
+    for _ in range(_KM_ITERS):
+        cents = _km_update(
+            _km_assign_arrow(e_q, cents), e_q
+        ).localCheckpoint(eager=True)
+    return cents
+
+
+def _km_label_seeds(e, e_q):
+    """Label-seeded centroids: each label's min-vec_id vector, cell id =
+    label."""
+    seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
+    return (
+        seeds.alias("s")
+        .join(e_q.alias("v"), F.col("s.sid") == F.col("v.vec_id"))
+        .select(F.col("s.label").alias("cell"), F.col("v.qe").alias("cq"))
     )
 
 
 def _km_train(spark, e_q, k: int, stride: int):
     """Sampled-Lloyd coarse-quantizer train, shared by the IVF-auto,
-    batch-serve and SemDeDup bodies: returns the trained (cell, cq)
+    batch-serve, SemDeDup and elbow bodies: returns the trained (cell, cq)
     centroid table after ``_KM_ITERS`` Lloyd rounds, vec_id-seeded with
     the k smallest ids as singleton cells.
 
@@ -617,17 +677,14 @@ def _km_train(spark, e_q, k: int, stride: int):
     full-corpus assignment, serving) stays distributed.
 
     ``stride <= 1`` (the full-corpus-train contrast regime,
-    `sim_ann_kmeans_ivf_topk_auto`) keeps the distributed loop verbatim
-    — there the train set IS the corpus and must never hit the driver."""
+    `sim_ann_kmeans_ivf_topk_auto`, `emb_kmeans_elbow_curve`) calls
+    `_km_lloyd` — there the train set IS the corpus and must never hit
+    the driver."""
     cents = e_q.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cell"), F.col("qe").alias("cq")
     )
     if stride <= 1:
-        for _ in range(_KM_ITERS):
-            cents = _km_update(
-                _km_assign_arrow(e_q, cents), e_q
-            ).localCheckpoint(eager=True)
-        return cents
+        return _km_lloyd(e_q, cents)
     seeds = sorted(
         cents.collect(),  # driver-bounded: k <= _KM_AUTO_MAX_K rows
         key=lambda r: r.cell,
@@ -729,34 +786,13 @@ def sim_ann_kmeans_ivf_topk(spark, sf_dir):
     trained cell id becomes the partition key so a probe reads nprobe/K
     of the data."""
     e = load(spark, sf_dir, "embeddings")
-    e_q = e.select(
-        "vec_id",
-        "label",
-        as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ).localCheckpoint(eager=True)
-    seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
-    cents = (
-        seeds.alias("s")
-        .join(e_q.alias("v"), F.col("s.sid") == F.col("v.vec_id"))
-        .select(F.col("s.label").alias("cell"), F.col("v.qe").alias("cq"))
-    )
-    for _ in range(_KM_ITERS):
-        # eager checkpoint per round: K rows, keeps the plan shallow and
-        # lets the trained table's three consumers (final assignment,
-        # probe cell ranking, search join) reuse it instead of re-running
-        # the whole training lineage.
-        cents = _km_update(
-            _km_assign_arrow(e_q, cents), e_q
-        ).localCheckpoint(eager=True)
+    e_q = _quantized(e, "label")
+    cents = _km_lloyd(e_q, _km_label_seeds(e, e_q))
     final_assign = _km_assign_arrow(e_q, cents)
     probe = e_q.filter(F.col("vec_id") == _PROBE_ID).select(
         F.col("de").alias("pe")
     )
-    cd = F.transform("cq", lambda x: x.cast("double") / _CENT_SCALE)
+    cd = _dequantize("cq")
     best_cell = (
         cents.join(F.broadcast(probe))
         .select("cell", F.round(cosine(cd, F.col("pe")), 6).alias("cs"))
@@ -1815,26 +1851,8 @@ def embedding_index_pipeline(spark, sf_dir):
     manifest IS the partition layout: vectors land in cell-keyed
     partitions sized by n_vecs."""
     e = load(spark, sf_dir, "embeddings")
-    e_q = e.select(
-        "vec_id",
-        "label",
-        as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ).localCheckpoint(eager=True)
-    seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
-    cents = (
-        seeds.alias("s")
-        .join(e_q.alias("v"), F.col("s.sid") == F.col("v.vec_id"))
-        .select(F.col("s.label").alias("cell"), F.col("v.qe").alias("cq"))
-    )
-    for _ in range(_KM_ITERS):
-        cents = _km_update(
-            _km_assign_arrow(e_q, cents), e_q
-        ).localCheckpoint(eager=True)
-    assign = _km_assign_arrow(e_q, cents)
+    e_q = _quantized(e, "label")
+    assign = _km_assign_arrow(e_q, _km_lloyd(e_q, _km_label_seeds(e, e_q)))
     q = F.transform(as_double("embedding"), lambda x: F.floor(x * 127 + 0.5).cast("int"))
     q8 = e.select(
         "vec_id",
@@ -1958,11 +1976,65 @@ _PQ_SUB = 16  # dims per subspace (4 x 16 = 64)
 _PQ_K = 8  # codewords per subspace
 
 
-def _pq_il2_sql(a: str, b: str) -> str:
-    """DuckDB: integer squared-L2 between two int64 lists of length
-    {_PQ_SUB}."""
+def _pq_split(df, arr, *keys):
+    """One (*keys, m, sv) row per subspace: the 64-dim int64 array
+    ``arr`` cut into its _PQ_M contiguous _PQ_SUB-dim subvectors."""
+    return df.select(
+        *keys,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(m).alias("m"),
+                        F.slice(arr, m * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
+                    )
+                    for m in range(_PQ_M)
+                ]
+            )
+        ).alias("ms"),
+    ).select(*keys, "ms.m", "ms.sv")
+
+
+def _pq_assign(subs, codebook, keys):
+    """Nearest codeword per (*keys, m) subvector by integer squared-L2,
+    ties to the smallest k.
+
+    The argmin over the K codewords is ``min_by`` — a partial-aggregable
+    reduction (the `_km_assign` max_by precedent), so the n·M·K scored
+    rows collapse map-side to one row per subvector BEFORE the exchange
+    instead of being shuffled AND sorted by a row_number window. min of
+    the (dist, k) struct is the window's exact (dist, k) ordering — k is
+    unique within a group, so the argmin is deterministic; the law test
+    pins row-identity with the window form at both fixtures."""
     return (
-        f"list_aggregate(list_transform(generate_series(1, {_PQ_SUB}),"
+        subs.join(F.broadcast(codebook), "m")
+        .select(*keys, "m", "k", _gr_isq(F.col("sv"), F.col("cw")).alias("dist"))
+        .groupBy(*keys, "m")
+        .agg(F.min_by("k", F.struct("dist", "k")).alias("k"))
+        .select(*keys, "m", "k")
+    )
+
+
+def _pq_train(subs, keys):
+    """The PQ train → encode chain over ``_pq_split`` rows: per-subspace
+    codebooks seeded with vec_id 0.._PQ_K-1's subvectors, one Lloyd round
+    (assign + floored-mean refine), then every subvector encoded against
+    the refined codebook. Returns (cb1, enc): the pinned (m, k, cw)
+    codebook and the (*keys, m, k) codes."""
+    cb0 = subs.filter(F.col("vec_id") < _PQ_K).select(
+        "m", F.col("vec_id").alias("k"), F.col("sv").alias("cw")
+    )
+    members = _pq_assign(subs, cb0, keys).join(subs, [*keys, "m"])
+    cb1 = _floor_mean(members, ["m", "k"], "sv", "cw").localCheckpoint(
+        eager=True
+    )  # M x K rows; the encode and the caller's tables read it
+    return cb1, _pq_assign(subs, cb1, keys)
+
+
+def _il2_sql(a: str, b: str, n: int) -> str:
+    """DuckDB: integer squared-L2 between two int64 lists of length n."""
+    return (
+        f"list_aggregate(list_transform(generate_series(1, {n}),"
         f" i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), 'sum')"
     )
 
@@ -1989,7 +2061,7 @@ def _pq_il2_sql(a: str, b: str) -> str:
       SELECT vec_id, m, k FROM (
         SELECT s.vec_id, s.m, c.k,
                row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {_pq_il2_sql('s.sv', 'c.cw')}, c.k) AS rn
+                 ORDER BY {_il2_sql('s.sv', 'c.cw', _PQ_SUB)}, c.k) AS rn
         FROM subs s JOIN cb0 c ON c.m = s.m
       ) WHERE rn = 1
     ),
@@ -2007,13 +2079,13 @@ def _pq_il2_sql(a: str, b: str) -> str:
       SELECT vec_id, m, k FROM (
         SELECT s.vec_id, s.m, c.k,
                row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {_pq_il2_sql('s.sv', 'c.cw')}, c.k) AS rn
+                 ORDER BY {_il2_sql('s.sv', 'c.cw', _PQ_SUB)}, c.k) AS rn
         FROM subs s JOIN cb1 c ON c.m = s.m
       ) WHERE rn = 1
     ),
     probe AS (SELECT m, sv FROM subs WHERE vec_id = {_PROBE_ID}),
     ptab AS (
-      SELECT c.m, c.k, {_pq_il2_sql('p.sv', 'c.cw')} AS pd
+      SELECT c.m, c.k, {_il2_sql('p.sv', 'c.cw', _PQ_SUB)} AS pd
       FROM cb1 c JOIN probe p ON p.m = c.m
     ),
     adc AS (
@@ -2052,71 +2124,16 @@ def sim_pq_adc_topk(spark, sf_dir):
     multiprobe ops); composes with IVF cells for the full IVF-PQ index."""
     e_q = (
         load(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            F.transform(
-                as_double("embedding"),
-                lambda x: F.round(x * _CENT_SCALE).cast("long"),
-            ).alias("qe"),
-        )
+        .select("vec_id", _quantize("embedding").alias("qe"))
         .localCheckpoint(eager=True)
     )
-    subs = e_q.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("qe", m * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
-                    )
-                    for m in range(_PQ_M)
-                ]
-            )
-        ).alias("ms"),
-    ).select("vec_id", "ms.m", "ms.sv")
-
-    def il2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    def assign(codebook):
-        w = Window.partitionBy("vec_id", "m").orderBy("dist", "k")
-        return (
-            subs.join(F.broadcast(codebook), "m")
-            .select("vec_id", "m", "k", il2(F.col("sv"), F.col("cw")).alias("dist"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "m", "k")
-        )
-
-    cb0 = subs.filter(F.col("vec_id") < _PQ_K).select(
-        "m", F.col("vec_id").alias("k"), F.col("sv").alias("cw")
-    )
-    cb1 = (
-        assign(cb0)
-        .join(subs, ["vec_id", "m"])
-        .select("m", "k", F.posexplode("sv").alias("pos", "q"))
-        .groupBy("m", "k", "pos")
-        .agg(
-            F.floor(F.sum("q").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("cp")
-        )
-        .groupBy("m", "k")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cp"))).alias("p"))
-        .select("m", "k", F.transform("p", lambda s: s.getField("cp")).alias("cw"))
-        .localCheckpoint(eager=True)  # M x K rows; 3 consumers below
-    )
-    enc = assign(cb1)
+    subs = _pq_split(e_q, "qe", "vec_id")
+    cb1, enc = _pq_train(subs, ["vec_id"])
     probe = subs.filter(F.col("vec_id") == _PROBE_ID).select(
         "m", F.col("sv").alias("pv")
     )
     ptab = cb1.join(F.broadcast(probe), "m").select(
-        "m", "k", il2(F.col("pv"), F.col("cw")).alias("pd")
+        "m", "k", _gr_isq(F.col("pv"), F.col("cw")).alias("pd")
     )
     adc = (
         enc.filter(F.col("vec_id") != _PROBE_ID)
@@ -2129,14 +2146,6 @@ def sim_pq_adc_topk(spark, sf_dir):
         adc.withColumn("rk", F.row_number().over(w).cast("int"))
         .filter(F.col("rk") <= _TOPK)
         .select("vec_id", F.col("approx_dist").cast("long").alias("approx_dist"), "rk")
-    )
-
-
-def _il2_sql(a: str, b: str, n: int) -> str:
-    """DuckDB: integer squared-L2 between two int64 lists of length n."""
-    return (
-        f"list_aggregate(list_transform(generate_series(1, {n}),"
-        f" i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), 'sum')"
     )
 
 
@@ -2261,30 +2270,12 @@ def sim_ivf_pq_topk(spark, sf_dir):
     standard billion-vector index."""
     e_q = (
         load(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            "label",
-            F.transform(
-                as_double("embedding"),
-                lambda x: F.round(x * _CENT_SCALE).cast("long"),
-            ).alias("qe"),
-        )
+        .select("vec_id", "label", _quantize("embedding").alias("qe"))
         .localCheckpoint(eager=True)
     )
     cint = (
-        e_q.select("label", F.posexplode("qe").alias("pos", "q"))
-        .groupBy("label", "pos")
-        .agg(
-            F.floor(F.sum("q").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("cq")
-        )
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cq"))).alias("p"))
-        .select(
-            F.col("label").alias("cell"),
-            F.transform("p", lambda s: s.getField("cq")).alias("cq"),
-        )
+        _floor_mean(e_q, ["label"], "qe", "cq")
+        .select(F.col("label").alias("cell"), "cq")
         .localCheckpoint(eager=True)  # 10 rows; 3 consumers below
     )
     res = e_q.join(F.broadcast(cint), e_q.label == cint.cell).select(
@@ -2292,81 +2283,14 @@ def sim_ivf_pq_topk(spark, sf_dir):
         "cell",
         F.zip_with("qe", "cq", lambda a, b: a - b).alias("re"),
     )
-    subs = res.select(
-        "vec_id",
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("re", m * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
-                    )
-                    for m in range(_PQ_M)
-                ]
-            )
-        ).alias("ms"),
-    ).select("vec_id", "cell", "ms.m", "ms.sv")
-
-    def il2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    def assign(codebook):
-        # round-15 opt session 2: min_by replaces the row_number window —
-        # the argmin over the K codewords of each (vec_id, m) subvector
-        # is a partial-aggregable reduction (the `_km_assign` max_by
-        # precedent, r12), so the n·M·K scored rows collapse map-side to
-        # one row per subvector BEFORE the exchange instead of being
-        # shuffled AND sorted by the window; run twice per build
-        # (codebook refine + final encode). min of the (dist, k) struct
-        # is the window's exact (dist, k) ordering — k is unique within
-        # a group, so the argmin is deterministic and the law test pins
-        # row-identity with the window form at both fixtures.
-        return (
-            subs.join(F.broadcast(codebook), "m")
-            .select(
-                "vec_id",
-                "cell",
-                "m",
-                "k",
-                il2(F.col("sv"), F.col("cw")).alias("dist"),
-            )
-            .groupBy("vec_id", "cell", "m")
-            .agg(F.min_by("k", F.struct("dist", "k")).alias("k"))
-            .select("vec_id", "cell", "m", "k")
-        )
-
-    cb0 = subs.filter(F.col("vec_id") < _PQ_K).select(
-        "m", F.col("vec_id").alias("k"), F.col("sv").alias("cw")
-    )
-    cb1 = (
-        assign(cb0)
-        .join(subs, ["vec_id", "m"])
-        .select("m", "k", F.posexplode("sv").alias("pos", "q"))
-        .groupBy("m", "k", "pos")
-        .agg(
-            F.floor(F.sum("q").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("cp")
-        )
-        .groupBy("m", "k")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cp"))).alias("p"))
-        .select(
-            "m", "k", F.transform("p", lambda s: s.getField("cp")).alias("cw")
-        )
-        .localCheckpoint(eager=True)  # M x K rows; 2 consumers below
-    )
-    enc = assign(cb1)
+    subs = _pq_split(res, "re", "vec_id", "cell")
+    cb1, enc = _pq_train(subs, ["vec_id", "cell"])
     pv = e_q.filter(F.col("vec_id") == _PROBE_ID).select(
         F.col("qe").alias("pq")
     )
     pcell = (
         cint.crossJoin(F.broadcast(pv))
-        .select("cell", il2(F.col("cq"), F.col("pq")).alias("d"))
+        .select("cell", _gr_isq(F.col("cq"), F.col("pq")).alias("d"))
         .orderBy("d", "cell")
         .limit(_IVFPQ_NPROBE)
         .select("cell")
@@ -2378,22 +2302,9 @@ def sim_ivf_pq_topk(spark, sf_dir):
             "cell", F.zip_with("pq", "cq", lambda a, b: a - b).alias("re")
         )
     )
-    psubs = pres.select(
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("re", m * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
-                    )
-                    for m in range(_PQ_M)
-                ]
-            )
-        ).alias("ms"),
-    ).select("cell", "ms.m", "ms.sv")
+    psubs = _pq_split(pres, "re", "cell")
     ptab = cb1.join(F.broadcast(psubs), "m").select(
-        "cell", "m", "k", il2(F.col("sv"), F.col("cw")).alias("pd")
+        "cell", "m", "k", _gr_isq(F.col("sv"), F.col("cw")).alias("pd")
     )
     adc = (
         enc.filter(F.col("vec_id") != _PROBE_ID)
@@ -2527,12 +2438,7 @@ def emb_centroid_drift(spark, sf_dir):
             "vec_id",
             "label",
             (F.col("vec_id") % 2 == 0).alias("half_a"),
-            F.posexplode(
-                F.transform(
-                    as_double("embedding"),
-                    lambda x: F.round(x * _CENT_SCALE).cast("long"),
-                )
-            ).alias("pos0", "qv"),
+            F.posexplode(_quantize("embedding")).alias("pos0", "qv"),
         )
         .select("vec_id", "label", "half_a", (F.col("pos0") + 1).alias("pos"), "qv")
     )
@@ -2604,12 +2510,7 @@ def emb_duplicate_vectors_exact(spark, sf_dir):
         "label",
         F.sha2(
             F.array_join(
-                F.transform(
-                    as_double("embedding"),
-                    lambda x: F.round(x * _CENT_SCALE)
-                    .cast("long")
-                    .cast("string"),
-                ),
+                F.transform(_quantize("embedding"), lambda q: q.cast("string")),
                 ",",
             ),
             256,
@@ -2819,12 +2720,9 @@ def _gr_nodes(e, blocked: bool = False, tables=None):
         return F.instr(F.lit("0123456789abcdef"), F.substring(h, i, 1)) - 1
 
     hv = nib(1) * 16 + nib(2)
-    qe = F.transform(
-        as_double("embedding"), lambda x: F.round(x * _CENT_SCALE).cast("long")
-    )
     cols = [
         F.col("vec_id"),
-        qe.alias("qe"),
+        _quantize("embedding").alias("qe"),
         F.when(hv % 16 == 0, 2).when(hv % 4 == 0, 1).otherwise(0).alias("lvl"),
     ]
     if blocked:
@@ -2931,7 +2829,7 @@ def _grb_scored_pairs(nodes):
     # arithmetic — the asymptotic win belongs to the kernel, the
     # fixture-scale win to neither
     @F.pandas_udf("long")
-    def il2_pd(a: pd.Series, b: pd.Series) -> pd.Series:
+    def isq_pd(a: pd.Series, b: pd.Series) -> pd.Series:
         if len(a) == 0:
             return pd.Series([], dtype="int64")
         aa = np.array(a.tolist(), dtype=np.int64)
@@ -2948,7 +2846,7 @@ def _grb_scored_pairs(nodes):
             "dst",
             "src_lvl",
             "dst_lvl",
-            il2_pd(F.col("qa"), F.col("qb")).alias("d"),
+            isq_pd(F.col("qa"), F.col("qb")).alias("d"),
         )
     )
 
@@ -3211,12 +3109,7 @@ def sim_ann_graph_topk_naive_demo(spark, sf_dir):
     nodes = _gr_nodes(e.filter(F.col("vec_id") != _PROBE_ID)).localCheckpoint()
     probe = (
         e.filter(F.col("vec_id") == _PROBE_ID)
-        .select(
-            F.transform(
-                as_double("embedding"),
-                lambda x: F.round(x * _CENT_SCALE).cast("long"),
-            ).alias("pq")
-        )
+        .select(_quantize("embedding").alias("pq"))
         .localCheckpoint()
     )
     nd = _gr_probe_dists(nodes, probe)
@@ -3360,20 +3253,20 @@ def _gr_blocked(spark, sf_dir, tables=None):
     # 13.40 → 9.86 multifile; ab_gr_pin_overlap.log) — the saved wait is
     # the smaller (probe) pin job. The probe-as-literal-array variant
     # was measured here too and REJECTED (see `_gr_search`'s docstring).
+    # The pool callables carry the caller's Spark context (job group,
+    # local properties) via `inheritable_thread_target`; a bare pool
+    # thread would run its jobs outside the caller's group.
+    @inheritable_thread_target(spark)
     def _mk_nodes():
         return _gr_nodes(
             e.filter(F.col("vec_id") != _PROBE_ID), blocked=True, tables=tables
         ).localCheckpoint()
 
+    @inheritable_thread_target(spark)
     def _mk_probe():
         return (
             e.filter(F.col("vec_id") == _PROBE_ID)
-            .select(
-                F.transform(
-                    as_double("embedding"),
-                    lambda x: F.round(x * _CENT_SCALE).cast("long"),
-                ).alias("pq")
-            )
+            .select(_quantize("embedding").alias("pq"))
             .localCheckpoint()
         )
 
@@ -3553,14 +3446,7 @@ def _km_ivf_auto_body(spark, sf_dir, k: int, nprobe: int, stride: int = 1):
     e = load(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    e_q = e.select(
-        "vec_id",
-        as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = _quantized(e)
     # round-15 opt session 2: the stride-sampled train runs driver-local
     # on the bounded sample; the stride=1 contrast regime keeps the
     # distributed loop — see `_km_train`.
@@ -3569,7 +3455,7 @@ def _km_ivf_auto_body(spark, sf_dir, k: int, nprobe: int, stride: int = 1):
     probe = e_q.filter(F.col("vec_id") == _PROBE_ID).select(
         F.col("de").alias("pe")
     )
-    cd = F.transform("cq", lambda x: x.cast("double") / _CENT_SCALE)
+    cd = _dequantize("cq")
     best_cell = (
         cents.join(F.broadcast(probe))
         .select("cell", F.round(cosine(cd, F.col("pe")), 6).alias("cs"))
@@ -3887,14 +3773,7 @@ def sim_ann_kmeans_ivf_batch_topk(spark, sf_dir, n_override: int = None):
     k = _km_auto_k(n)
     nprobe = _km_auto_nprobe(k)
     stride = _km_auto_stride(n, k)
-    e_q = e.select(
-        "vec_id",
-        as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = _quantized(e)
     # round-15 opt session 2: the stride-sampled train runs driver-local
     # on the bounded sample; the stride=1 contrast regime keeps the
     # distributed loop — see `_km_train`.
@@ -3903,7 +3782,7 @@ def sim_ann_kmeans_ivf_batch_topk(spark, sf_dir, n_override: int = None):
     probes = e_q.filter(F.col("vec_id") < _N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("de").alias("pe")
     )
-    cd = F.transform("cq", lambda x: x.cast("double") / _CENT_SCALE)
+    cd = _dequantize("cq")
     wrank = Window.partitionBy("probe_id").orderBy(F.desc("ccs"), "cell")
     crank = (
         cents.join(F.broadcast(probes))  # k x |probes| rows — broadcast grain
@@ -4105,19 +3984,12 @@ def _sd_body(spark, sf_dir, k: int, stride: int, tau: float, emit: str = "report
     e = load(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    e_q = e.select(
-        "vec_id",
-        as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = _quantized(e)
     # round-15 opt session 2: driver-local sampled train (see `_km_train`
     # — SemDeDup's occupancy sizing keeps stride > 1 at every n).
     cents = _km_train(spark, e_q, k, stride)
     assign = _km_assign_arrow(e_q, cents)
-    cd = F.transform("cq", lambda q: q.cast("double") / _CENT_SCALE)
+    cd = _dequantize("cq")
     base = (
         assign.alias("a")
         .join(e_q.alias("v"), F.col("a.vec_id") == F.col("v.vec_id"))
@@ -4971,12 +4843,7 @@ def emb_covariance_isotropy(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     q = e.select(
         "vec_id",
-        F.posexplode(
-            F.transform(
-                as_double("embedding"),
-                lambda x: F.round(x * _CENT_SCALE).cast("long"),
-            )
-        ).alias("pos0", "q"),
+        F.posexplode(_quantize("embedding")).alias("pos0", "q"),
     ).select("vec_id", (F.col("pos0") + 1).alias("pos"), "q")
     m = q.groupBy("pos").agg(
         F.floor(F.sum("q").cast("double") / F.count("*"))
@@ -5192,9 +5059,7 @@ def sim_ann_graph_recall_eval(spark, sf_dir):
     pipelines, one agreement row."""
     ann = QUERIES["sim_ann_graph_topk"](spark, sf_dir).select("vec_id")
     e = load(spark, sf_dir, "embeddings")
-    qe = F.transform(
-        as_double("embedding"), lambda x: F.round(x * _CENT_SCALE).cast("long")
-    )
+    qe = _quantize("embedding")
     probe = e.filter(F.col("vec_id") == _PROBE_ID).select(qe.alias("pq"))
     brute = (
         e.filter(F.col("vec_id") != _PROBE_ID)
@@ -5291,24 +5156,10 @@ def emb_label_separation_report(spark, sf_dir):
     against its own (broadcast) centroid; the centroid-pair table is
     |labels|² — trivial at any corpus size."""
     e = load(spark, sf_dir, "embeddings")
-    qe = F.transform(
-        as_double("embedding"), lambda x: F.round(x * _CENT_SCALE).cast("long")
-    )
-    qv = e.select("vec_id", "label", qe.alias("qe"))
+    qv = e.select("vec_id", "label", _quantize("embedding").alias("qe"))
     cint = (
-        qv.select("label", F.posexplode("qe").alias("pos", "q"))
-        .groupBy("label", "pos")
-        .agg(
-            F.floor(F.sum("q").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("cq")
-        )
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cq"))).alias("p"))
-        .select(
-            F.col("label").alias("cell"),
-            F.transform("p", lambda s: s.getField("cq")).alias("cq"),
-        )
+        _floor_mean(qv, ["label"], "qe", "cq")
+        .select(F.col("label").alias("cell"), "cq")
         .localCheckpoint(eager=True)  # |labels| rows; 3 consumers
     )
     wd = (
@@ -5424,9 +5275,7 @@ def emb_random_projection_distortion(spark, sf_dir):
     broadcast as literals, the LSH-plane discipline); the pair sample
     joins on an id shift — O(n), no quadratic anywhere."""
     pl = _jl_planes()
-    qe = F.transform(
-        as_double("embedding"), lambda x: F.round(x * _CENT_SCALE).cast("long")
-    )
+    qe = _quantize("embedding")
 
     def dotp(plane):
         lit = F.array(*[F.lit(x).cast("long") for x in plane])
@@ -5549,9 +5398,7 @@ def sim_mmr_diversified_topk(spark, sf_dir):
     why bounding it to a small candidate pool is the standard production
     shape."""
     e = load(spark, sf_dir, "embeddings")
-    qe = F.transform(
-        as_double("embedding"), lambda x: F.round(x * _CENT_SCALE).cast("long")
-    )
+    qe = _quantize("embedding")
     qv = e.select("vec_id", qe.alias("qe"))
     pv = qv.filter(F.col("vec_id") == _PROBE_ID).select(
         F.col("qe").alias("pq")
@@ -5881,25 +5728,8 @@ def emb_ivf_cell_balance(spark, sf_dir):
     hash-grouped aggregates over the |V|-row assignment plus a
     per-cell argmax window PARTITIONED by cell."""
     e = load(spark, sf_dir, "embeddings")
-    e_q = e.select(
-        "vec_id",
-        "label",
-        as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ).localCheckpoint(eager=True)
-    seeds = e.groupBy("label").agg(F.min("vec_id").alias("sid"))
-    cents = (
-        seeds.alias("s")
-        .join(e_q.alias("v"), F.col("s.sid") == F.col("v.vec_id"))
-        .select(F.col("s.label").alias("cell"), F.col("v.qe").alias("cq"))
-    )
-    for _ in range(_KM_ITERS):
-        cents = _km_update(
-            _km_assign_arrow(e_q, cents), e_q
-        ).localCheckpoint(eager=True)
+    e_q = _quantized(e, "label")
+    cents = _km_lloyd(e_q, _km_label_seeds(e, e_q))
     # shared by 3 consumers
     afin = _km_assign_arrow(e_q, cents).localCheckpoint()
     tot = afin.agg(
@@ -6173,29 +6003,16 @@ def emb_kmeans_elbow_curve(spark, sf_dir):
     (embarrassingly parallel across k at cluster scale); the output is
     3 rows. Cost scales with k·rounds, not k²."""
     e = load(spark, sf_dir, "embeddings")
-    e_q = e.select(
-        "vec_id",
-        as_double("embedding").alias("de"),
-        F.transform(
-            as_double("embedding"),
-            lambda x: F.round(x * _CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = _quantized(e)
     rows = None
     for k in _ELBOW_KS:
-        cents = e_q.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("cell"), F.col("qe").alias("cq")
-        )
-        for _ in range(_KM_ITERS):
-            cents = _km_update(
-                _km_assign_arrow(e_q, cents), e_q
-            ).localCheckpoint(eager=True)
+        cents = _km_train(spark, e_q, k, 1)
         # Arrow argmax picks the cell; the inertia term cs is then ONE
         # JVM-side cosine per vector against the assigned centroid
-        # (broadcast k-row join) — O(n) cosine evaluations instead of
-        # the old O(n*k) scored-fold, and the emitted value goes through
-        # the exact same codegen'd cosine + F.round the oracle mirrors.
-        cd = F.transform("cq", lambda q: q.cast("double") / _CENT_SCALE)
+        # (broadcast k-row join) — O(n) cosine evaluations, and the
+        # emitted value goes through the exact same codegen'd cosine +
+        # F.round the oracle mirrors.
+        cd = _dequantize("cq")
         fin = (
             _km_assign_arrow(e_q, cents)
             .join(e_q.select("vec_id", "de"), "vec_id")
@@ -6251,7 +6068,7 @@ def emb_kmeans_elbow_curve(spark, sf_dir):
       SELECT vec_id, m, k FROM (
         SELECT s.vec_id, s.m, c.k,
                row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {_pq_il2_sql('s.sv', 'c.cw')}, c.k) AS rn
+                 ORDER BY {_il2_sql('s.sv', 'c.cw', _PQ_SUB)}, c.k) AS rn
         FROM subs s JOIN cb0 c ON c.m = s.m
       ) WHERE rn = 1
     ),
@@ -6269,7 +6086,7 @@ def emb_kmeans_elbow_curve(spark, sf_dir):
       SELECT vec_id, m, k FROM (
         SELECT s.vec_id, s.m, c.k,
                row_number() OVER (PARTITION BY s.vec_id, s.m
-                 ORDER BY {_pq_il2_sql('s.sv', 'c.cw')}, c.k) AS rn
+                 ORDER BY {_il2_sql('s.sv', 'c.cw', _PQ_SUB)}, c.k) AS rn
         FROM subs s JOIN cb1 c ON c.m = s.m
       ) WHERE rn = 1
     ),
@@ -6289,14 +6106,13 @@ def emb_pq_code_balance(spark, sf_dir):
     """Codebook-utilization report for the PQ index — the PQ sibling of
     `emb_ivf_cell_balance`: after the SAME train→encode chain as
     `sim_pq_adc_topk` (seeded codebooks, one Lloyd round of integer
-    squared-L2 assignment + floored-mean update — the chain is duplicated
-    here verbatim rather than refactored out, so the green serving op's
-    plan is untouched), count how many vectors each of the {_PQ_M}×
-    {_PQ_K} codewords actually encodes. Dead codewords (n_vecs = 0 —
-    kept via the LEFT join from the codebook side) waste code space and
-    signal bad seeding; a dominant codeword means the subspace carries
-    little information and ADC distances degrade — this is the
-    index-health check FAISS users run as `codebook imbalance`.
+    squared-L2 assignment + floored-mean update, `_pq_train`), count how
+    many vectors each of the {_PQ_M}×{_PQ_K} codewords actually encodes.
+    Dead codewords (n_vecs = 0 — kept via the LEFT join from the
+    codebook side) waste code space and signal bad seeding; a dominant
+    codeword means the subspace carries little information and ADC
+    distances degrade — this is the index-health check FAISS users run
+    as `codebook imbalance`.
     Exactness: assignment uses the integer-L2 + codeword tie-break
     discipline, counts and floor-div shares are exact. Scale shape:
     training/encoding shuffle (vec, subspace)-grain integer subvectors;
@@ -6304,68 +6120,10 @@ def emb_pq_code_balance(spark, sf_dir):
     KB-scale broadcast."""
     e_q = (
         load(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            F.transform(
-                as_double("embedding"),
-                lambda x: F.round(x * _CENT_SCALE).cast("long"),
-            ).alias("qe"),
-        )
+        .select("vec_id", _quantize("embedding").alias("qe"))
         .localCheckpoint(eager=True)
     )
-    subs = e_q.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("qe", m * _PQ_SUB + 1, _PQ_SUB).alias("sv"),
-                    )
-                    for m in range(_PQ_M)
-                ]
-            )
-        ).alias("ms"),
-    ).select("vec_id", "ms.m", "ms.sv")
-
-    def il2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    def assign(codebook):
-        w = Window.partitionBy("vec_id", "m").orderBy("dist", "k")
-        return (
-            subs.join(F.broadcast(codebook), "m")
-            .select(
-                "vec_id", "m", "k", il2(F.col("sv"), F.col("cw")).alias("dist")
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "m", "k")
-        )
-
-    cb0 = subs.filter(F.col("vec_id") < _PQ_K).select(
-        "m", F.col("vec_id").alias("k"), F.col("sv").alias("cw")
-    )
-    cb1 = (
-        assign(cb0)
-        .join(subs, ["vec_id", "m"])
-        .select("m", "k", F.posexplode("sv").alias("pos", "q"))
-        .groupBy("m", "k", "pos")
-        .agg(
-            F.floor(F.sum("q").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("cp")
-        )
-        .groupBy("m", "k")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cp"))).alias("p"))
-        .select("m", "k", F.transform("p", lambda s: s.getField("cp")).alias("cw"))
-        .localCheckpoint(eager=True)  # M x K rows; assign + report join
-    )
-    enc = assign(cb1)
+    cb1, enc = _pq_train(_pq_split(e_q, "qe", "vec_id"), ["vec_id"])
     bt = enc.groupBy("m").agg(F.count("*").cast("long").alias("tot"))
     bc = enc.groupBy("m", "k").agg(F.count("*").cast("long").alias("n_vecs"))
     return (

@@ -518,13 +518,12 @@ def test_ivf_pq_structure_and_pinned_recall(spark, sf_dir):
     index quality across the family is the point, not a high absolute)."""
     from pyspark.sql import functions as F
 
-    from dataflow_pubsub_message_encryption_spark.functions.vectors import as_double
     from dataflow_pubsub_message_encryption_spark.operators.similarity import (
-        _CENT_SCALE,
         _IVFPQ_NPROBE,
         _PROBE_ID,
         _TOPK,
         _gr_isq,
+        _quantize,
         QUERIES as SQ,
     )
     from dataflow_pubsub_message_encryption_spark.sources import load
@@ -538,9 +537,7 @@ def test_ivf_pq_structure_and_pinned_recall(spark, sf_dir):
     labels = {
         r.vec_id: r.label for r in e.select("vec_id", "label").collect()
     }
-    qe = F.transform(
-        as_double("embedding"), lambda x: F.round(x * _CENT_SCALE).cast("long")
-    )
+    qe = _quantize("embedding")
     probe = e.filter(F.col("vec_id") == _PROBE_ID).select(qe.alias("pq"))
     brute = {
         r.vec_id
@@ -627,19 +624,18 @@ def test_graph_ann_recall_vs_brute(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from dataflow_pubsub_message_encryption_spark.operators.similarity import (
-        _CENT_SCALE,
         _PROBE_ID,
         _TOPK,
         _gr_isq,
+        _quantize,
         sim_ann_graph_topk_naive_demo,
         QUERIES as SQ,
     )
-    from dataflow_pubsub_message_encryption_spark.functions.vectors import as_double
     from dataflow_pubsub_message_encryption_spark.sources import load
 
     ann = {r.vec_id for r in sim_ann_graph_topk_naive_demo(spark, sf_dir).collect()}
     e = load(spark, sf_dir, "embeddings")
-    qe = F.transform(as_double("embedding"), lambda x: F.round(x * _CENT_SCALE).cast("long"))
+    qe = _quantize("embedding")
     probe = e.filter(F.col("vec_id") == _PROBE_ID).select(qe.alias("pq"))
     brute = {
         r.vec_id

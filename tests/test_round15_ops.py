@@ -30,17 +30,7 @@ def _e_q(spark, fixture, with_label=False):
     from dataflow_pubsub_message_encryption_spark.sources import load
 
     e = load(spark, fixture, "embeddings")
-    cols = [
-        "vec_id",
-        S.as_double("embedding").alias("de"),
-        F.transform(
-            S.as_double("embedding"),
-            lambda x: F.round(x * S._CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ]
-    if with_label:
-        cols.insert(1, F.col("label"))
-    return e.select(*cols).localCheckpoint(eager=True)
+    return S._quantized(e, "label") if with_label else S._quantized(e)
 
 
 def _seed_cents_vecid(spark, e_q):
@@ -50,15 +40,6 @@ def _seed_cents_vecid(spark, e_q):
     k = S._km_auto_k(n)
     return e_q.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cell"), F.col("qe").alias("cq")
-    )
-
-
-def _seed_cents_label(spark, e_q):
-    seeds = e_q.groupBy("label").agg(F.min("vec_id").alias("sid"))
-    return (
-        seeds.alias("s")
-        .join(e_q.alias("v"), F.col("s.sid") == F.col("v.vec_id"))
-        .select(F.col("s.label").alias("cell"), F.col("v.qe").alias("cq"))
     )
 
 
@@ -75,7 +56,7 @@ def test_km_assign_arrow_equals_fold(spark, fixture, seeding):
 
     e_q = _e_q(spark, fixture, with_label=(seeding == "label"))
     cents = (
-        _seed_cents_label(spark, e_q)
+        S._km_label_seeds(e_q, e_q)
         if seeding == "label"
         else _seed_cents_vecid(spark, e_q)
     ).localCheckpoint(eager=True)
@@ -434,11 +415,7 @@ def test_km_assign_arrow_multibatch_and_empty_partitions(spark, shape):
     if shape == "skewed_empty":
         base = base.repartition(64, F.col("vec_id") % 3)
     e_q = base.select(
-        "vec_id",
-        "de",
-        F.transform(
-            "de", lambda x: F.round(x * S._CENT_SCALE).cast("long")
-        ).alias("qe"),
+        "vec_id", "de", S._quantize("de").alias("qe")
     ).localCheckpoint(eager=True)
     cents = e_q.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("cell"), F.col("qe").alias("cq")

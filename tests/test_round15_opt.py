@@ -23,6 +23,9 @@ they compute; these laws are the equivalence proofs:
 - The embedding-LSH broadcast regime keeps its broadcast join after the
   round-robin scan spread (the repartition must parallelize the scan,
   not displace the join strategy the round-14 measurements picked).
+- The thread-pool overlaps (RFM's three rank passes, the blocked graph
+  build's nodes/probe pins) keep the caller's Spark context: every pool
+  job runs in the caller's job group.
 """
 
 from __future__ import annotations
@@ -44,27 +47,10 @@ def _sd_base(spark, fixture):
     )
     n = e.count()
     k = S._sd_auto_k(n)
-    stride = S._km_auto_stride(n, k)
-    e_q = e.select(
-        "vec_id",
-        S.as_double("embedding").alias("de"),
-        F.transform(
-            S.as_double("embedding"),
-            lambda x: F.round(x * S._CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ).localCheckpoint(eager=True)
-    cents = e_q.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cell"), F.col("qe").alias("cq")
-    )
-    train = e_q if stride <= 1 else e_q.filter(
-        F.col("vec_id") % stride == 0
-    ).localCheckpoint(eager=True)
-    for _ in range(S._KM_ITERS):
-        cents = S._km_update(
-            S._km_assign_arrow(train, cents), train
-        ).localCheckpoint(eager=True)
+    e_q = S._quantized(e)
+    cents = S._km_train(spark, e_q, k, S._km_auto_stride(n, k))
     assign = S._km_assign_arrow(e_q, cents)
-    cd = F.transform("cq", lambda q: q.cast("double") / S._CENT_SCALE)
+    cd = S._dequantize("cq")
     return (
         assign.alias("a")
         .join(e_q.alias("v"), F.col("a.vec_id") == F.col("v.vec_id"))
@@ -122,12 +108,7 @@ def test_grb_edges_all_equals_per_level(spark, fixture):
 
     probe = (
         e.filter(F.col("vec_id") == S._PROBE_ID)
-        .select(
-            F.transform(
-                S.as_double("embedding"),
-                lambda x: F.round(x * S._CENT_SCALE).cast("long"),
-            ).alias("pq")
-        )
+        .select(S._quantize("embedding").alias("pq"))
         .localCheckpoint()
     )
     fused = S._grb_edges_all(scored, S._gr_probe_dists(nodes, probe))
@@ -256,14 +237,7 @@ def test_km_train_local_equals_distributed(spark, fixture):
         spark.sparkContext.defaultParallelism
     )
     n = e.count()
-    e_q = e.select(
-        "vec_id",
-        S.as_double("embedding").alias("de"),
-        F.transform(
-            S.as_double("embedding"),
-            lambda x: F.round(x * S._CENT_SCALE).cast("long"),
-        ).alias("qe"),
-    ).localCheckpoint(eager=True)
+    e_q = S._quantized(e)
     for k in (S._km_auto_k(n), S._sd_auto_k(n)):
         stride = S._km_auto_stride(n, k)
         assert stride > 1, "fixture fell into the full-train regime — law vacuous"
@@ -288,13 +262,15 @@ def test_km_train_local_equals_distributed(spark, fixture):
 
 
 @pytest.mark.parametrize("fixture", FIXTURES)
-def test_pq_assign_min_by_equals_window(spark, fixture):
-    """The PQ codeword assignment's min_by reduction (engine path since
-    the r15 optimization's second session) must pick, for every
-    (vec_id, m) subvector, exactly the codeword the row_number window it
-    replaced picked — same (dist, k) ordering, k unique within a group.
-    Reconstructs sim_ivf_pq_topk's subs/cb0 stage verbatim and compares
-    both assign forms row for row at both graded fixtures."""
+@pytest.mark.parametrize("subvectors", ["residual", "raw"])
+def test_pq_assign_min_by_equals_window(spark, fixture, subvectors):
+    """The PQ codeword assignment's min_by reduction (`_pq_assign`, the
+    engine path) must pick, for every (vec_id, m) subvector, exactly the
+    codeword a row_number window over (dist, k) picks — k is unique
+    within a group. Checked on both subvector inputs the engine feeds
+    it: sim_ivf_pq_topk's per-cell RESIDUAL subvectors and the RAW `qe`
+    subvectors of sim_pq_adc_topk / emb_pq_code_balance, against the
+    seed codebook, row for row at both graded fixtures."""
     from pyspark.sql import Window
 
     from dataflow_pubsub_message_encryption_spark.operators import similarity as S
@@ -302,79 +278,40 @@ def test_pq_assign_min_by_equals_window(spark, fixture):
 
     e_q = (
         load(spark, fixture, "embeddings")
-        .select(
-            "vec_id",
-            "label",
-            F.transform(
-                S.as_double("embedding"),
-                lambda x: F.round(x * S._CENT_SCALE).cast("long"),
-            ).alias("qe"),
-        )
+        .select("vec_id", "label", S._quantize("embedding").alias("qe"))
         .localCheckpoint(eager=True)
     )
-    cint = (
-        e_q.select("label", F.posexplode("qe").alias("pos", "q"))
-        .groupBy("label", "pos")
-        .agg(
-            F.floor(F.sum("q").cast("double") / F.count("*"))
-            .cast("long")
-            .alias("cq")
+    if subvectors == "residual":
+        cint = S._floor_mean(e_q, ["label"], "qe", "cq").select(
+            F.col("label").alias("cell"), "cq"
         )
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cq"))).alias("p"))
-        .select(
-            F.col("label").alias("cell"),
-            F.transform("p", lambda s: s.getField("cq")).alias("cq"),
+        res = e_q.join(F.broadcast(cint), e_q.label == cint.cell).select(
+            "vec_id",
+            "cell",
+            F.zip_with("qe", "cq", lambda a, b: a - b).alias("re"),
         )
-    )
-    res = e_q.join(F.broadcast(cint), e_q.label == cint.cell).select(
-        "vec_id",
-        "cell",
-        F.zip_with("qe", "cq", lambda a, b: a - b).alias("re"),
-    )
-    subs = res.select(
-        "vec_id",
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("re", m * S._PQ_SUB + 1, S._PQ_SUB).alias("sv"),
-                    )
-                    for m in range(S._PQ_M)
-                ]
-            )
-        ).alias("ms"),
-    ).select("vec_id", "cell", "ms.m", "ms.sv")
-
-    def il2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
+        keys = ["vec_id", "cell"]
+        subs = S._pq_split(res, "re", *keys)
+    else:
+        keys = ["vec_id"]
+        subs = S._pq_split(e_q, "qe", *keys)
 
     cb0 = subs.filter(F.col("vec_id") < S._PQ_K).select(
         "m", F.col("vec_id").alias("k"), F.col("sv").alias("cw")
     )
     scored = subs.join(F.broadcast(cb0), "m").select(
-        "vec_id", "cell", "m", "k", il2(F.col("sv"), F.col("cw")).alias("dist")
+        *keys, "m", "k", S._gr_isq(F.col("sv"), F.col("cw")).alias("dist")
     )
     w = Window.partitionBy("vec_id", "m").orderBy("dist", "k")
     window_form = sorted(
-        (r.vec_id, r.cell, r.m, r.k)
+        tuple(r)
         for r in scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("vec_id", "cell", "m", "k")
+        .select(*keys, "m", "k")
         .collect()
     )
     min_by_form = sorted(
-        (r.vec_id, r.cell, r.m, r.k)
-        for r in scored.groupBy("vec_id", "cell", "m")
-        .agg(F.min_by("k", F.struct("dist", "k")).alias("k"))
-        .select("vec_id", "cell", "m", "k")
-        .collect()
+        tuple(r) for r in S._pq_assign(subs, cb0, keys).collect()
     )
     assert window_form, "fixture admits no PQ assignments — law vacuous"
     assert window_form == min_by_form
@@ -630,3 +567,35 @@ def test_cc_labels_cover_every_pair_endpoint(spark, fixture):
         by_cluster.setdefault(r.cluster_id, set()).add(r.doc_id)
     for cid, members in by_cluster.items():
         assert cid == min(members)  # canonical id is the member minimum
+
+
+@pytest.mark.parametrize(
+    "key", ["rfm_segmentation_scalable", "sim_ann_graph_topk_blocked"]
+)
+def test_pool_jobs_stay_in_caller_job_group(spark, key):
+    """Both keys submit independent eager jobs from a thread pool. Every
+    job must run in the caller's job group — a pool thread that drops
+    the caller's local properties would escape `cancelJobGroup` and
+    per-group accounting. The law: after running the key under
+    `setJobGroup`, no new job ran without a group, and the group holds
+    jobs."""
+    from dataflow_pubsub_message_encryption_spark.operators import registry
+
+    queries, _ = registry()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"pool-law-{key}"
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, key)
+    try:
+        queries[key](spark, FIXTURES[0]).collect()
+    finally:
+        for prop in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(prop, None)
+    stray = set(tracker.getJobIdsForGroup(None)) - before
+    assert not stray, f"{len(stray)} pool job(s) ran outside the job group"
+    assert tracker.getJobIdsForGroup(group)

@@ -37,12 +37,7 @@ def _blocked_build(spark, fixture):
     ).localCheckpoint()
     probe = (
         e.filter(F.col("vec_id") == S._PROBE_ID)
-        .select(
-            F.transform(
-                S.as_double("embedding"),
-                lambda x: F.round(x * S._CENT_SCALE).cast("long"),
-            ).alias("pq")
-        )
+        .select(S._quantize("embedding").alias("pq"))
         .localCheckpoint()
     )
     scored = S._grb_scored_pairs_arrow(nodes).localCheckpoint()
